@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR, forcing full computation through the noop sink
   * (count() would let Catalyst prune the work; noop executes the complete
@@ -10,14 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // SQL fns + top-k strategy/rule
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = builder.getOrCreate()
+    val spark = Sessions.local().getOrCreate()
     // SPARK_GRAFT_CONF="k=v;k=v" extra confs (local experiment aid).
     // Applied AFTER getOrCreate: builder configs are silently ignored
     // when a session already exists in the JVM, while conf.set applies
@@ -66,9 +57,8 @@ object Bench {
     // widest expression trees); run 2 is the steady-state per-batch cost —
     // the number that scales with data volume.
     // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (local iteration aid)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = only.fold(SparkEntry.registry)(names =>
-      SparkEntry.registry.filter(q => names.contains(q.name)))
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val selected = only.fold(SparkEntry.registry)(SparkEntry.select)
     val results = selected.map { q =>
       // a failed query reports -1.0 — a visible sentinel in the JSON, not
       // a plausible-looking near-zero timing

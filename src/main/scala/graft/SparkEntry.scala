@@ -21,6 +21,20 @@ object SparkEntry {
       analytics.CorpusStatsQueries.all ++ analytics.PlanningQueries.all ++
       analytics.RankStatQueries.all ++ analytics.SelectionQueries.all
 
+  /** The registered queries named in `csv` (comma-separated, entries
+    * trimmed, blanks dropped), in registration order — the
+    * SPARK_GRAFT_ONLY filter of Bench and Verify and Explain's argument.
+    * An unknown name or an empty list throws: either would otherwise
+    * select nothing and a run would pass vacuously. */
+  def select(csv: String): Seq[GraftQuery] = {
+    val names = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- registry.map(_.name)
+    require(names.nonEmpty, s"no query names in '$csv'")
+    require(unknown.isEmpty,
+      s"names not in the registry: ${unknown.toSeq.sorted.mkString(", ")}")
+    registry.filter(q => names.contains(q.name))
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Top-10 customers by revenue: scan → broadcast dim joins → grouped
     * decimal aggregate → window rank → top-k, one plan. */

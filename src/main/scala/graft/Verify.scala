@@ -1,32 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // SQL fns + top-k strategy/rule
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // comma-separated name filter for fast local iteration (same contract
-    // as Bench's SPARK_GRAFT_ONLY); unset = the full driver-run surface
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd name would otherwise select NOTHING and the oracle check
-    // would pass vacuously ("0 fail of 0") — fail loudly instead
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in the registry: ${unknown.mkString(", ")}")
-    }
+    // SPARK_GRAFT_ONLY=q_a,q_b restricts the run (local iteration aid);
+    // unset = the full driver-run surface
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.select(_).map(_.name).toSet)
     def selected(name: String) = only.forall(_.contains(name))
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

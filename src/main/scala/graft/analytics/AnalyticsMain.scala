@@ -1,7 +1,8 @@
 package graft.analytics
 
+import graft.Sessions
 import graft.sources.Sources
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** CLI mirroring the reference's `python analysis.py` + the dashboard's
   * JSON endpoints (EP2/EP3): computes every chart dataset, API payload and
@@ -17,12 +18,7 @@ object AnalyticsMain {
     require(args.length >= 2, "usage: AnalyticsMain <cleanData> <outDir> [state] [keyword]")
     val input = args(0); val outDir = args(1)
     val filters = ListingQueries.Filters(args.lift(2), args.lift(3))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-analytics")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Sessions.local().appName("graft-analytics").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val base =

@@ -1,7 +1,7 @@
 package graft.etl
 
-import graft.schema.Schemas
-import org.apache.spark.sql.SparkSession
+import graft.Sessions
+import graft.sources.Sources
 
 /** CLI entry point mirroring the reference's `python etl.py --input …`
   * (etl.py:476-486): raw listing CSV in → clean parquet + CSV, issues,
@@ -13,12 +13,9 @@ object EtlMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: EtlMain <rawCsv> <outDir> [fallbackScrapedAtIso]")
     val Array(input, outDir) = args.take(2)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    // SPARK_MASTER: the deployment address, when not a local run
+    val builder = Sessions.local().appName("graft-etl")
+    val spark = sys.env.get("SPARK_MASTER").fold(builder)(builder.master).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val mtime = args.lift(2).orElse {
@@ -27,11 +24,7 @@ object EtlMain {
         Some(java.time.Instant.ofEpochMilli(f.lastModified()).toString)
       else None
     }
-    val raw = spark.read
-      .option("header", "true").option("multiLine", "true")
-      .option("quote", "\"").option("escape", "\"")
-      .schema(Schemas.raw)
-      .csv(input)
+    val raw = Sources.readRawCsv(spark, input)
 
     val r = CleanPipeline.run(raw, mtime)
     r.clean.write.mode("overwrite").parquet(s"$outDir/clean.parquet")

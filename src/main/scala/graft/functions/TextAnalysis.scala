@@ -36,10 +36,6 @@ object TextAnalysis {
     coalesce(regexp_count(c, lit("[^\\w\\s]")), lit(0)).cast(DoubleType) /
       greatest(length(c), lit(1)).cast(DoubleType)
 
-  def upperRatio(c: Column): Column =
-    coalesce(regexp_count(c, lit("[A-Z]")), lit(0)).cast(DoubleType) /
-      greatest(length(c), lit(1)).cast(DoubleType)
-
   /** Fraction of tokens found in `stops`. */
   def stopwordRatio(c: Column, stops: Seq[String]): Column = {
     val ts = tokens(c)
@@ -65,18 +61,6 @@ object TextAnalysis {
   def langScores(c: Column): Seq[(String, Column)] =
     Stopwords.toSeq.sortBy(_._1).map { case (l, stops) => l -> stopwordRatio(c, stops) } :+
       ("zh" -> cjkRatio(c))
-
-  /** Heuristic language-ID: argmax of langScores with deterministic
-    * first-wins tie-break in (de, en, es, fr, zh) order; all-zero → "und"
-    * (undetermined). */
-  def langId(c: Column): Column = {
-    val scores = langScores(c)
-    val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
-    val chain = scores.foldLeft(when(best === 0.0, "und")) { case (acc, (l, s)) =>
-      acc.when(s === best, l)
-    }
-    chain.otherwise("und")
-  }
 
   /** Composite quality score in [0,1] (length / punctuation / stopword
     * signals, the reference-free analogue of data-quality scoring for

@@ -29,12 +29,6 @@ object Multimodal {
       media_id: Long, kind: String, byte_size: Long, sha256: String,
       width: Int, height: Int, n_frames: Int, duration_ms: Long)
 
-  val featureSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType), StructField("kind", StringType),
-    StructField("byte_size", LongType), StructField("sha256", StringType),
-    StructField("width", IntegerType), StructField("height", IntegerType),
-    StructField("n_frames", IntegerType), StructField("duration_ms", LongType)))
-
   /** STUB decoder: deterministic fake metadata derived from the payload
     * bytes (sha-seeded). A real implementation decodes headers/frames. */
   object FakeDecoder {

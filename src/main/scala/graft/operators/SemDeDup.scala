@@ -133,7 +133,8 @@ object SemDeDup {
     * the symmetric union's extra sec×sec surface (both vectors
     * outsiders to a THIRD cell) buys near-identical pairs almost
     * nothing and measured 5.4× the primary pair mass against this
-    * form's ≤ Σ(p_f + s_f)·p_f ≈ 2× (SemDedupCensus 2lmp, sf10).
+    * form's ≤ Σ(p_f + s_f)·p_f ≈ 2× (sf10; SCALING.md, "Round-14:
+    * coarse top-2 multi-probe recovers the two-level recall").
     *
     * Pair accounting: primary×primary keeps the strict id_a < id_b
     * half (each pair once — exactly [[droppedIds]]'s surface, so the

@@ -605,21 +605,4 @@ object Similarity {
       .agg(round(count(lit(1)).cast(DoubleType) / k, 6).as("recall_at_k"))
     approx.crossJoin(hits)
   }
-
-  /** Exact k-NN join: for each left row, top-k right rows by cosine.
-    * O(|L|×|R|) — correct but quadratic; the LSH variant is the scale
-    * path. Kept for verification and small dimension tables. */
-  def knnJoin(
-      left: DataFrame, right: DataFrame,
-      idL: String, idR: String, vecL: String, vecR: String, k: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id_l")).orderBy(col("cos_sim").desc, col("id_r"))
-    left.select(col(idL).as("id_l"), col(vecL).as("vl"))
-      .crossJoin(right.select(col(idR).as("id_r"), col(vecR).as("vr")))
-      .select(col("id_l"), col("id_r"),
-        round(cosineNative(col("vl"), col("vr")), 6).as("cos_sim"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .drop("rk")
-  }
 }

@@ -1,11 +1,13 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
-/** Perf-loop helper: print the formatted physical plan and timed runs of
-  * one or more registered queries (comma-separated), in ONE JVM/session —
-  * the per-query timings then measure plans, not session startup.
+/** Perf-loop helper: print the formatted physical plan, a one-line
+  * operator census (exchange/join/window counts — the raw material for
+  * PlanAuditSpec assertions) and timed runs of one or more registered
+  * queries (comma-separated), in ONE JVM/session — the per-query timings
+  * then measure plans, not session startup. `reps` = 0 skips the timed
+  * runs.
   *
   * Usage: runMain graft.tools.Explain <q1[,q2,...]> [sfDir] [reps]
   *
@@ -17,30 +19,23 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
+    val queries = SparkEntry.select(args(0))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions) // SQL fns + top-k strategy, as Bench/Verify
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val planSuffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")
-    names.foreach { name =>
-      val q = SparkEntry.registry.find(_.name == name)
-        .getOrElse(sys.error(s"unknown query $name; have: ${SparkEntry.registry.map(_.name).mkString(", ")}"))
+    queries.foreach { q =>
+      val name = q.name
       spark.sparkContext.setJobDescription(s"explain:$name")
       val df = q.run(spark, sfDir)
       val planText = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       println(s"==== $name ====")
       println(planText)
+      println(census(name, df.queryExecution.executedPlan.toString))
       planDir.foreach { d =>
         val p = java.nio.file.Paths.get(d, s"$name$planSuffix.txt")
         Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
@@ -60,5 +55,12 @@ object Explain {
       spark.sparkContext.setJobDescription(null)
     }
     spark.stop()
+  }
+
+  private def census(name: String, plan: String): String = {
+    def n(op: String) = op.r.findAllIn(plan).length
+    s"PLAN $name exch=${n("Exchange hashpartitioning")} range=${n("Exchange rangepartitioning")} " +
+      s"bhj=${n("BroadcastHashJoin")} smj=${n("SortMergeJoin")} bnl=${n("BroadcastNestedLoopJoin")} " +
+      s"cart=${plan.contains("CartesianProduct")} win=${plan.contains("windowspecdefinition")}"
   }
 }

@@ -40,12 +40,7 @@ object ScaleUp {
     val Array(src, dst) = args.take(2)
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1, s"factor=$factor")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     scaleAll(spark, src, dst, factor)
     spark.stop()

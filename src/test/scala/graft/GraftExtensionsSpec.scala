@@ -101,4 +101,24 @@ class GraftExtensionsSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("integer literal"))
   }
+
+  test("Sessions is the one session builder, and its sessions carry the extensions") {
+    import scala.jdk.CollectionConverters._
+    // a hand-rolled builder lets an entry point run a different engine
+    // (no GraftExtensions, other confs) from the one the specs exercise
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"${root.toAbsolutePath} not found")
+    val walk = java.nio.file.Files.walk(root)
+    val files = try walk.iterator.asScala.toList finally walk.close()
+    val builders = files
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Sessions.scala")
+      .filter(p => java.nio.file.Files.readString(p).contains("SparkSession.builder"))
+    assert(builders.isEmpty, s"SparkSession.builder outside Sessions.scala: ${builders.mkString(", ")}")
+    // this spec's session is Sessions-built (SparkSpec)
+    val cpus = "local\\[(\\d+)\\]".r.findFirstMatchIn(spark.sparkContext.master)
+      .map(_.group(1)).getOrElse(fail(s"master ${spark.sparkContext.master}"))
+    assert(spark.sparkContext.getConf.get("spark.sql.shuffle.partitions") === cpus)
+    val cos = spark.sql("SELECT graft_cosine(array(1D, 2D), array(2D, 4D))").head().getDouble(0)
+    assert(math.abs(cos - 1.0) < 1e-12)
+  }
 }

@@ -17,6 +17,14 @@ class RegistrySpec extends SparkSpec {
     assert(SparkEntry.registry.size >= 40)
   }
 
+  test("select trims names, keeps registration order and rejects unknown names") {
+    val Seq(a, b) = SparkEntry.registry.take(2).map(_.name)
+    assert(SparkEntry.select(s" $b , $a,").map(_.name) === Seq(a, b))
+    val e = intercept[IllegalArgumentException](SparkEntry.select(s"$a,q_no_such_query"))
+    assert(e.getMessage.contains("q_no_such_query"))
+    intercept[IllegalArgumentException](SparkEntry.select(" , "))
+  }
+
   test("entry() smoke: rows > 0") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

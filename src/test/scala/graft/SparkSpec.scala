@@ -4,15 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs; mirrors the driver harness confs. */
+/** Shared local SparkSession for specs: the entry points' [[Sessions]]
+  * configuration on a fixed 4 cores, so results do not depend on the
+  * host. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .withExtensions(new GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = Sessions.local(cpus = 4)
     .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
     // fresh warehouse per JVM: the in-memory catalog forgets tables across
     // sessions but their directories would otherwise persist and collide

@@ -1,8 +1,7 @@
 package graft.render
 
-import graft.SparkSpec
+import graft.{ListingFixture, SparkSpec}
 import graft.multimodal.Multimodal
-import graft.schema.Schemas
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -14,18 +13,7 @@ class ChartsSpec extends SparkSpec {
   private def readPng(bytes: Array[Byte]): java.awt.image.BufferedImage =
     javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
 
-  private lazy val clean: DataFrame = {
-    val g = spark.read
-      .option("header", "true").option("multiLine", "true")
-      .option("quote", "\"").option("escape", "\"")
-      .csv("/root/reference/clean_data.csv")
-    val denan = g.select(g.columns.map { c =>
-      when(col(c) === "NaN", lit(null)).otherwise(col(c)).as(c)
-    }.toSeq: _*)
-    Schemas.clean.fields.foldLeft(denan) { (d, f) =>
-      d.withColumn(f.name, col(f.name).try_cast(f.dataType))
-    }.select(Schemas.finalColumns.map(col): _*).cache()
-  }
+  private lazy val clean: DataFrame = ListingFixture.clean(spark)
 
   test("barsPng: proportional heights, axis frame, deterministic bytes") {
     val b1 = Charts.barsPng(Seq(1.0, 2.0, 4.0), width = 320, height = 200, margin = 20)

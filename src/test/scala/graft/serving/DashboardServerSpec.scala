@@ -1,14 +1,13 @@
 package graft.serving
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import graft.SparkSpec
+import graft.{ListingFixture, SparkSpec}
 import graft.analytics.ListingQueries
 import graft.analytics.ListingQueries.Filters
-import graft.schema.Schemas
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** EP3 serving layer: the eight /api/… endpoints over the golden clean
+/** EP3 serving layer: the eight /api/… endpoints over the fixture's clean
   * listings — JSON values must equal the direct DataFrame computations,
   * filters must apply case-insensitively, and the writer must escape
   * correctly. */
@@ -16,18 +15,7 @@ class DashboardServerSpec extends SparkSpec {
 
   private val mapper = new ObjectMapper()
 
-  private lazy val clean: DataFrame = {
-    val g = spark.read
-      .option("header", "true").option("multiLine", "true")
-      .option("quote", "\"").option("escape", "\"")
-      .csv("/root/reference/clean_data.csv")
-    val denan = g.select(g.columns.map { c =>
-      when(col(c) === "NaN", lit(null)).otherwise(col(c)).as(c)
-    }.toSeq: _*)
-    Schemas.clean.fields.foldLeft(denan) { (d, f) =>
-      d.withColumn(f.name, col(f.name).try_cast(f.dataType))
-    }.select(Schemas.finalColumns.map(col): _*).cache()
-  }
+  private lazy val clean: DataFrame = ListingFixture.clean(spark)
 
   private lazy val started = DashboardServer.start(clean)
 
