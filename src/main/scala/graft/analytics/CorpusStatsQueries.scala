@@ -2,6 +2,7 @@ package graft.analytics
 
 import graft.{GraftQuery, Tables}
 import graft.functions.TextAnalysis
+import graft.operators.DriverLoop
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -1494,11 +1495,9 @@ object CorpusStatsQueries {
     * joins, localCheckpoint per round), so rounds cost the same at any
     * corpus size. */
   /** q_nmf_topics's engine body, factored so the spec can pin the two
-    * MM-loop paths equal (`driverMaxGrid = 0` forces the distributed
-    * rounds — the spec hook). */
+    * MM-loop paths equal (gated by [[graft.operators.DriverLoop]]). */
   private[graft] def nmfTopicsFrame(
-      s: org.apache.spark.sql.SparkSession, dir: String,
-      driverMaxGrid: Long = 200000L): org.apache.spark.sql.DataFrame = {
+      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     locally {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
@@ -1521,7 +1520,7 @@ object CorpusStatsQueries {
           .join(cc, Seq("tid", "sid"), "left")
           .select($"tid", $"sid", coalesce($"c", lit(0L)).as("v")))
       // Grid-sized MM state takes the 3 rounds in driver arrays — the
-      // round-15 small-state routing discipline (Graphs.DriverMaxGraphEdges):
+      // round-15 small-state routing discipline (DriverLoop):
       // the corpus rollup above stays distributed; the collected grid is
       // |top 50| × |sources| rows. Every arithmetic expression is
       // replicated tree-for-tree (same IEEE double ops in the same
@@ -1530,7 +1529,7 @@ object CorpusStatsQueries {
       // unrolled-CTE oracle hash-gates it at both SFs. Grids beyond the
       // gate (unbounded source domain) take the distributed loop below.
       val vCnt = v.count()
-      if (vCnt <= driverMaxGrid) {
+      if (vCnt <= DriverLoop.maxRows) {
         val S2 = S // avoid closure confusion; S = 1e6
         val grid = v.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         val topRows = top.collect().map(r => (r.getString(0), r.getLong(1)))

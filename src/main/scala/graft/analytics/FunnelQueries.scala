@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.{GraftQuery, Tables}
+import graft.operators.DriverLoop
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -554,11 +555,10 @@ object FunnelQueries {
     * everything after (the variant relation is (channels+1) × states
     * rows; every join side broadcasts). */
   /** q_markov_attribution's engine body, factored so the spec can pin
-    * the two removal-effect-loop paths equal (`driverMaxEdges = 0`
-    * forces the distributed rounds — the spec hook). */
+    * the two removal-effect-loop paths equal (gated by
+    * [[graft.operators.DriverLoop]]). */
   private[graft] def markovAttributionFrame(
-      s: org.apache.spark.sql.SparkSession, dir: String,
-      driverMaxEdges: Long = 100000L): org.apache.spark.sql.DataFrame = {
+      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     locally {
       import s.implicits._
       val ev = Tables.events(s, dir)
@@ -590,7 +590,7 @@ object FunnelQueries {
       // tree (measured 54 s at sf0.1; checkpointed: ~2 s)
       val e = edges.localCheckpoint()
       // Domain-sized chains take the 12 rounds in driver maps — the
-      // Graphs.DriverMaxGraphEdges routing discipline applied to the
+      // DriverLoop routing discipline applied to the
       // removal-effect loop: the corpus passes (journey window, edge
       // rollup) stay distributed and end at the checkpoint above; the
       // fixed point then runs over (variants × edges) integer state
@@ -599,7 +599,7 @@ object FunnelQueries {
       // the MATERIALIZED variant surface so an adversarial state domain
       // still routes to the distributed loop below.
       val eCnt = e.count()
-      val driverResult: Option[org.apache.spark.sql.DataFrame] = if (eCnt <= driverMaxEdges) {
+      val driverResult: Option[org.apache.spark.sql.DataFrame] = if (eCnt <= DriverLoop.maxRows) {
         val rows = e.collect() // (src, dst, n)
         val outw = scala.collection.mutable.HashMap.empty[String, Long]
         rows.foreach { r =>
@@ -608,7 +608,7 @@ object FunnelQueries {
         val states = rows.map(_.getString(0)).distinct
         val channels = states.filter(_ != "__start__").sorted
         val variants = channels :+ "__none__"
-        if (variants.length.toLong * eCnt <= 2000000L) {
+        if (variants.length.toLong * eCnt <= DriverLoop.maxRows) {
           val redges = for {
             v <- variants
             r <- rows
@@ -2220,11 +2220,9 @@ object FunnelQueries {
     * the MM iterations run on the ≤|types|² pair panel (cached once) —
     * broadcast-sized at any corpus scale. */
   /** q_bradley_terry's engine body, factored so the spec can pin the
-    * two MM-loop paths equal (`driverMaxPairs = 0` forces the
-    * distributed rounds — the Graphs.DriverMaxGraphEdges spec hook). */
+    * two MM-loop paths equal (gated by [[graft.operators.DriverLoop]]). */
   private[graft] def bradleyTerryFrame(
-      s: org.apache.spark.sql.SparkSession, dir: String,
-      driverMaxPairs: Long = 100000L): org.apache.spark.sql.DataFrame = {
+      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val rounds = 3
     locally {
       import s.implicits._
@@ -2253,7 +2251,7 @@ object FunnelQueries {
       // unrolled-CTE oracle hash-gates the trajectory at both SFs;
       // FunnelQueries' spec pins this path equal to the distributed
       // rounds below, which unbounded type domains still take.
-      if (pn.count() <= driverMaxPairs) {
+      if (pn.count() <= DriverLoop.maxRows) {
         val rows = pn.collect().map(r =>
           (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
         val winsM = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]

@@ -198,16 +198,17 @@ object ListingQueries {
   /** reports/eda_summary.csv (A6): per-column missing count/pct desc —
     * one aggregate job for all columns. */
   def edaSummary(df: DataFrame): DataFrame = {
-    val n = df.count()
-    val rows = df.columns.toSeq.map { c =>
-      (c, df.schema(c).dataType.simpleString)
-    }
-    val aggs = df.columns.toSeq.map(c => count(col(c)).as(c))
+    // non-null count per column, then the row count last (read by
+    // position, so no alias can collide with a column name)
+    val cols = df.columns.toSeq
+    val aggs = cols.map(c => count(col(c))) :+ count(lit(1))
     val stat = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val n = stat.getLong(cols.length)
     val spark = df.sparkSession
     import spark.implicits._
-    rows.map { case (c, dt) =>
-      val nonNull = stat.getAs[Long](c)
+    cols.zipWithIndex.map { case (c, i) =>
+      val dt = df.schema(c).dataType.simpleString
+      val nonNull = stat.getLong(i)
       // n == 0 guard: an empty input (plausible after dashboard filters)
       // must report 0.0, not 0/0 = NaN (same contract as Profiler.profile)
       val pct =

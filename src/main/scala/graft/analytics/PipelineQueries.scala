@@ -2,7 +2,7 @@ package graft.analytics
 
 import graft.{GraftQuery, Tables}
 import graft.functions.TextAnalysis
-import graft.operators.Bloom
+import graft.operators.{Bloom, DriverLoop}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1394,16 +1394,15 @@ object PipelineQueries {
   )
 
   /** q_quality_logreg's engine body, factored so the spec can pin the
-    * two gradient-loop paths equal (`driverMaxRows = 0` forces the
-    * distributed rounds — the spec hook, same discipline as
+    * two gradient-loop paths equal (same discipline as
     * [[CorpusStatsQueries.nmfTopicsFrame]]). Corpora whose cached
-    * feature relation is ≤ driverMaxRows rows collect the TRAIN split's
-    * four integer features once and run the 20 full-batch rounds in a
-    * driver while-loop — one collect instead of 20 sequential
-    * 1-row-aggregate jobs (the r15 small-state routing discipline; at
-    * ~32 B/row the 2e6 gate bounds driver heap like
-    * Graphs.DriverMaxGraphEdges). Every arithmetic step is replicated
-    * operation for operation: the same Long products in the same
+    * feature relation is ≤ [[graft.operators.DriverLoop.maxRows]] rows
+    * collect the TRAIN split's four integer features once and run the
+    * 20 full-batch rounds in a driver while-loop — one collect instead
+    * of 20 sequential 1-row-aggregate jobs (the r15 small-state routing
+    * discipline; at ~32 B/row the 2e6 bound keeps this to tens of MB of
+    * driver heap). Every arithmetic step is replicated operation for
+    * operation: the same Long products in the same
     * shifted-non-negative truncating divisions (Spark `div` ≡ Java `/`
     * on the shifted operands), Long sums that wrap identically in
     * either engine, and the SAME driver-side update code both branches
@@ -1411,8 +1410,7 @@ object PipelineQueries {
     * oracle hash-gates it. The final forward pass and both accuracies
     * stay distributed (one job) in both branches. */
   private[graft] def qualityLogregFrame(
-      s: org.apache.spark.sql.SparkSession, dir: String,
-      driverMaxRows: Long = 2000000L): org.apache.spark.sql.DataFrame = {
+      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     locally {
       import s.implicits._
       val toks = TextAnalysis.tokens($"text")
@@ -1451,7 +1449,7 @@ object PipelineQueries {
       // the count materializes the feature cache (the loop needs it
       // warm either way) and gates the routing
       val nFeats = feats.count()
-      if (nFeats <= driverMaxRows) {
+      if (nFeats <= DriverLoop.maxRows) {
         // collect the TRAIN split's integer features once into primitive
         // arrays (f0 is the constant 1e6; toLocalIterator bounds boxed
         // Rows to one partition at a time) and run the 20 rounds as

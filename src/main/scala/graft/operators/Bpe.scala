@@ -66,33 +66,25 @@ object Bpe {
     x.length < y.length
   }
 
-  /** Vocabularies at or under this many distinct words run all merge
-    * rounds in driver maps instead of one rollup-and-collect job per
-    * round — the [[Graphs.DriverMaxGraphEdges]] routing discipline on
-    * the VOCAB relation (the corpus rollup that produces it always runs
-    * distributed). 2e6 (sym, n) rows ≈ tens of MB, broadcast-build
-    * scale; a web-corpus vocabulary beyond it takes the per-round
-    * distributed loop below. */
-  val DriverMaxVocab: Long = 2000000L
-
   /** Learn `rounds` merges from (wordCol, freqCol); returns the merge
     * table (rank, pair, merged, n_pair) — fewer than `rounds` rows if
     * the vocabulary runs out of pairs first. The vocab relation is
     * cached across rounds ([[Caches]]); each round adds one projection
     * to its plan (no joins), so lineage stays linear in `rounds`.
     *
-    * Vocabularies under `driverMaxVocab` take the identical merge walk
-    * in driver maps: same Long pair counts (addition commutes), same
-    * (count desc, pair asc) argmax — ties compared in UTF-8 byte order
-    * ([[utf8Less]]), exactly Spark's UTF8String order on ANY alphabet —
-    * and the same left-to-right continue-after-replacement replace
-    * semantics (Java String.replace ≡ Spark/DuckDB replace, the
-    * property the space-sentinel encoding already relies on).
-    * `driverMaxVocab = 0` forces the distributed loop (the spec hook);
-    * BpeSpec pins the two paths merge-for-merge equal. */
+    * Vocabularies of at most [[DriverLoop.maxRows]] distinct words take
+    * the identical merge walk in driver maps instead of one
+    * rollup-and-collect job per round (the corpus rollup that produces
+    * the vocab always runs distributed): same Long pair counts
+    * (addition commutes), same (count desc, pair asc) argmax — ties
+    * compared in UTF-8 byte order ([[utf8Less]]), exactly Spark's
+    * UTF8String order on ANY alphabet — and the same left-to-right
+    * continue-after-replacement replace semantics (Java String.replace
+    * ≡ Spark/DuckDB replace, the property the space-sentinel encoding
+    * already relies on). BpeSpec pins the two paths merge-for-merge
+    * equal. */
   def learnMerges(
-      words: DataFrame, wordCol: String, freqCol: String, rounds: Int,
-      driverMaxVocab: Long = DriverMaxVocab): DataFrame = {
+      words: DataFrame, wordCol: String, freqCol: String, rounds: Int): DataFrame = {
     require(rounds > 0, s"rounds=$rounds must be positive")
     val spark = words.sparkSession
     var vocab = Caches.register(words.select(
@@ -102,7 +94,7 @@ object Bpe {
         lit(" ")).as("sym"),
       col(freqCol).cast("long").as("n")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    if (vocab.count() <= driverMaxVocab) {
+    if (vocab.count() <= DriverLoop.maxRows) {
       var cur = vocab.collect().map(r => (r.getString(0), r.getLong(1)))
       var r = 1
       var exhausted = false

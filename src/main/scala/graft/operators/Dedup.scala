@@ -321,8 +321,8 @@ object Dedup {
     * rewrite — not worth it at these diameters.) Only ids appearing in
     * `pairs` are labeled (singletons are their own component trivially).
     *
-    * Graphs of at most `driverMaxEdges` UNDIRECTED edges close on the
-    * DRIVER via union-find instead (identical labels, O(E α(E)), no
+    * Graphs of at most [[DriverLoop.maxRows]] UNDIRECTED edges close on
+    * the DRIVER via union-find instead (identical labels, O(E α(E)), no
     * rounds; ~16 B of driver heap per edge plus one output Row per
     * vertex — the result relation itself) — see [[driverComponents]];
     * the distributed loop is the above-bound path.
@@ -337,7 +337,6 @@ object Dedup {
     * The sequential Verify/Bench harness satisfies this; concurrent use
     * needs a dedicated session. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 10,
-      driverMaxEdges: Long = 5000000L,
       checkpointDir: Option[String] = None): DataFrame = {
     require(maxIter > 0, s"maxIter=$maxIter must be positive")
     // `checkpointDir = Some(dir)` switches the loop's lineage truncation
@@ -410,19 +409,19 @@ object Dedup {
     val nEdges = edgesCk.count() // free — edges is already materialized
     // SMALL-GRAPH FAST PATH: the pair graph is a post-blocking artifact,
     // orders of magnitude smaller than the corpus (a df-capped near-dup
-    // pair list, not the documents). Up to `driverMaxEdges` UNDIRECTED
-    // edges (~80 MB of primitive longs at the 5M default — one direction
+    // pair list, not the documents). Up to DriverLoop.maxRows UNDIRECTED
+    // edges (~32 MB of primitive longs at the 2e6 bound — one direction
     // streamed into two long arrays, boxing bounded to one partition at a
     // time) a driver-side union-find closes it in one pass + O(E α(E)) —
     // versus ~diameter distributed rounds each paying multi-stage job
     // overhead. Same bounded-driver-state pattern as IvfIndex's sampled
     // Lloyd; the distributed loop below remains the path for graphs that
-    // outgrow the bound (specs pin both paths to identical output via
-    // driverMaxEdges = 0).
+    // outgrow the bound (specs pin both paths to identical output under
+    // a bound of 0).
     // ceil: self-loops appear once in the directed relation, and floor
     // division would route a 1-edge graph down the driver path even
-    // under driverMaxEdges = 0 (the spec hook that pins the loop path)
-    if ((nEdges + 1) / 2 <= driverMaxEdges) {
+    // under a bound of 0
+    if ((nEdges + 1) / 2 <= DriverLoop.maxRows) {
       // driverComponents materializes into driver arrays and returns a
       // local-rows relation — the edge checkpoint is dead once it returns
       val out = driverComponents(spark, edgesCk)

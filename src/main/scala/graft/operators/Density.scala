@@ -53,12 +53,11 @@ object Density {
     * OPPOSITE regime from the quasi-clique near-dup graphs
     * [[Dedup.connectedComponents]]'s diameter-bounded loop was built
     * for (measured: the sf1 customer plane's skeleton blew straight
-    * past that loop's 10 rounds). Under `driverMaxEdges` the driver
+    * past that loop's 10 rounds). Under [[DriverLoop.maxRows]] the driver
     * union-find closes it in one pass; above it the closure goes to
     * [[Graphs.bigStarComponents]] — O(log n) rounds regardless of
     * diameter, the correct asymptotics for chain-shaped components. */
-  def dbscan(pts: DataFrame, eps: Long, minPts: Int,
-      driverMaxEdges: Long = 5000000L): DataFrame = {
+  def dbscan(pts: DataFrame, eps: Long, minPts: Int): DataFrame = {
     require(eps > 0, s"eps=$eps must be positive")
     require(minPts >= 2, s"minPts=$minPts must be at least 2 (1 makes everything core)")
     val spark = pts.sparkSession
@@ -162,9 +161,11 @@ object Density {
     // route by size: driver union-find under the gate, star contraction
     // beyond it — NOT the min-label loop: even contracted, a skeleton of
     // cell-chains keeps diameter ∝ extent/eps, only O(log n) rounds are
-    // safe at scale
-    val linked = (if (skeleton.count() <= driverMaxEdges)
-        Dedup.connectedComponents(skeleton, driverMaxEdges = math.max(driverMaxEdges, 1L))
+    // safe at scale. Under the gate Dedup's own gate (ceil of its
+    // distinct undirected edges, at most this count) routes to its
+    // union-find too.
+    val linked = (if (skeleton.count() <= DriverLoop.maxRows)
+        Dedup.connectedComponents(skeleton)
       else Graphs.bigStarComponents(skeleton))
       .select($"id", $"label".as("cluster"))
     // isolated cores (≥ minPts border/noise neighbors, no core neighbor):

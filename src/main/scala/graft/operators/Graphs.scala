@@ -23,22 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object Graphs {
 
-  /** In-memory fixed-point gate (rows in the PRE-AGGREGATED edge
-    * relation): graphs at or under this size run the exact same integer
-    * fixed point in driver arrays instead of one distributed round per
-    * iteration — identical results (spec-pinned equal per operator),
-    * none of the per-round shuffle/checkpoint job overhead. This is the
-    * [[Dedup.connectedComponents]] `driverMaxEdges` routing discipline
-    * applied to the iterative operators: the gate is a ROW COUNT on the
-    * post-aggregation GRAPH, never a fraction of the corpus, so a
-    * 100 TB corpus whose graph is vocabulary-bounded (nation trade
-    * edges, top-k token co-occurrence) still — correctly — takes the
-    * in-memory path, while a billion-edge web graph routes to the
-    * distributed loop. 2e6 edges ≈ 50 MB of driver arrays, the same
-    * order as a broadcast-join build side (and well under the 5e6 gate
-    * connectedComponents has carried since round 3). */
-  val DriverMaxGraphEdges: Long = 2000000L
-
   /** 1e12 fixed-point scale: total rank mass = [[RankScale]], so a
     * per-vertex rank is exact to 12 decimal digits. */
   val RankScale: Long = 1000000000000L
@@ -80,21 +64,19 @@ object Graphs {
     * design (they ride as an `isin` literal); `n` is replaced by |S| in
     * the base and dangling terms, nothing else changes.
     *
-    * Graphs of at most `driverMaxEdges` summed edges run the identical
-    * integer fixed point in driver arrays ([[DriverMaxGraphEdges]]):
+    * Graphs of at most [[DriverLoop.maxRows]] summed edges run the
+    * identical integer fixed point in driver arrays:
     * the corpus-sized edge-building joins still execute distributed and
     * collapse to the graph-sized summed relation before the one
     * collect, so the driver never sees a corpus row — only the same
     * graph every iteration would otherwise re-shuffle. A durable
     * `checkpointDir` forces the distributed loop (executor-loss
-    * durability is the caller's explicit ask); `driverMaxEdges = 0` is
-    * the spec hook that pins the two paths equal. */
+    * durability is the caller's explicit ask). */
   def pagerank(
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
       iterations: Int, dampingPct: Int = 85,
       checkpointDir: Option[String] = None,
-      teleport: Option[Seq[Long]] = None,
-      driverMaxEdges: Long = DriverMaxGraphEdges): DataFrame = {
+      teleport: Option[Seq[Long]] = None): DataFrame = {
     require(iterations >= 1, s"iterations=$iterations must be >= 1")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct=$dampingPct must be in [0, 100]")
@@ -109,7 +91,7 @@ object Graphs {
       e.groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w")))
     val nEdges = summed.count()
     require(nEdges > 0, "Graphs.pagerank: empty edge list")
-    if (checkpointDir.isEmpty && nEdges <= driverMaxEdges)
+    if (checkpointDir.isEmpty && nEdges <= DriverLoop.maxRows)
       return pagerankDriver(edges.sparkSession, summed.collect(),
         iterations, dampingPct, teleport)
     val outw = summed.groupBy(col("src")).agg(sum(col("w")).as("outw"))
@@ -216,6 +198,20 @@ object Graphs {
     }
   }
 
+  /** Dense 0-based index over vertex ids in first-seen order, for the
+    * driver twins' arrays (order is irrelevant: the relation contract is
+    * unordered, as with the distributed paths). */
+  private final class VertexIndex {
+    private val idx = new java.util.HashMap[java.lang.Long, java.lang.Integer]()
+    private val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def apply(id: Long): Int = {
+      val got = idx.get(id)
+      if (got != null) got.intValue
+      else { val i = buf.length; idx.put(id, i); buf += id; i }
+    }
+    def verts: Array[Long] = buf.toArray
+  }
+
   /** The in-memory twin of [[pagerank]]'s distributed loop: the SAME
     * integer arithmetic, operation for operation — per-edge
     * `w·1e6 DIV outw` shares, per-edge `rank·share DIV 1e6` floor before
@@ -241,20 +237,12 @@ object Graphs {
         s"Graphs.pagerank: per-source weight exceeds $MaxSafeOutWeight; " +
           s"pre-scale edge weights$ow")
     }
-    // vertex index over the distinct endpoints (order irrelevant: the
-    // relation contract is unordered, as with the distributed path)
-    val idx = new java.util.HashMap[java.lang.Long, java.lang.Integer]()
-    val vertsBuf = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def vid(id: Long): Int = {
-      val got = idx.get(id)
-      if (got != null) got.intValue
-      else { val i = vertsBuf.length; idx.put(id, i); vertsBuf += id; i }
-    }
+    val vid = new VertexIndex
     val edges = summed.map { r =>
       val s = r.getLong(0)
       (vid(s), vid(r.getLong(1)), r.getLong(2) * ShareScale / outw.get(s))
     }
-    val verts = vertsBuf.toArray
+    val verts = vid.verts
     val n = verts.length
     val nT = teleport.map(_.size.toLong).getOrElse(n.toLong)
     val teleSet = teleport.map(_.toSet)
@@ -318,12 +306,10 @@ object Graphs {
     * out-edges keep hub 0, without in-edges authority 0 (coalesced in
     * the final left joins).
     *
-    * Graphs of at most `driverMaxEdges` distinct edges run the identical
-    * BigInt fixed point in driver arrays (see [[DriverMaxGraphEdges]];
-    * `driverMaxEdges = 0` forces the distributed loop — the spec hook). */
+    * Graphs of at most [[DriverLoop.maxRows]] distinct edges run the
+    * identical BigInt fixed point in driver arrays. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int,
-      driverMaxEdges: Long = DriverMaxGraphEdges): DataFrame = {
+      iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations=$iterations must be >= 1")
     val e = Caches.register(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
@@ -331,7 +317,7 @@ object Graphs {
     val spark = edges.sparkSession
     val nEdges = e.count()
     require(nEdges > 0, "Graphs.hits: empty edge list")
-    if (nEdges <= driverMaxEdges)
+    if (nEdges <= DriverLoop.maxRows)
       return hitsDriver(spark, e.collect(), iterations)
     val vertices = Caches.register(
       e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
@@ -409,15 +395,9 @@ object Graphs {
       spark: org.apache.spark.sql.SparkSession,
       eRows: Array[org.apache.spark.sql.Row],
       iterations: Int): DataFrame = {
-    val idx = new java.util.HashMap[java.lang.Long, java.lang.Integer]()
-    val vertsBuf = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def vid(id: Long): Int = {
-      val got = idx.get(id)
-      if (got != null) got.intValue
-      else { val i = vertsBuf.length; idx.put(id, i); vertsBuf += id; i }
-    }
+    val vid = new VertexIndex
     val edges = eRows.map(r => (vid(r.getLong(0)), vid(r.getLong(1))))
-    val verts = vertsBuf.toArray
+    val verts = vid.verts
     val n = verts.length
     val isSrc = new Array[Boolean](n)
     val isDst = new Array[Boolean](n)
@@ -473,8 +453,7 @@ object Graphs {
     * is bounded by the longest degeneracy chain, not corpus size —
     * single digits on real graphs. */
   def kcore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      maxIter: Int = 30,
-      driverMaxEdges: Long = DriverMaxGraphEdges): DataFrame = {
+      maxIter: Int = 30): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
     require(maxIter >= 1, s"maxIter=$maxIter must be >= 1")
     val e = edges.select(col(srcCol).cast("long").as("a"),
@@ -487,9 +466,9 @@ object Graphs {
       .distinct().localCheckpoint()
     val nEdges = und.count()
     // small graphs peel in driver arrays — same degree arithmetic, same
-    // fixpoint/empty/maxIter contract (see DriverMaxGraphEdges; the
-    // collect reads the just-checkpointed symmetric relation, no rescan)
-    if (nEdges <= driverMaxEdges)
+    // fixpoint/empty/maxIter contract (see DriverLoop; the collect
+    // reads the just-checkpointed symmetric relation, no rescan)
+    if (nEdges <= DriverLoop.maxRows)
       return kcoreDriver(spark, und.collect(), k, maxIter)
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val graphParts = math.max(1L, math.min(sessionParts.toLong,
@@ -625,8 +604,7 @@ object Graphs {
     * Integer weights keep the argmax engine-exact. Each round ends in a
     * localCheckpoint so lineage stays flat at any round count. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: String, rounds: Int,
-      driverMaxEdges: Long = DriverMaxGraphEdges): DataFrame = {
+      weightCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
     import org.apache.spark.sql.expressions.Window
     val e = edges.select(col(srcCol).cast("long").as("src"),
@@ -638,11 +616,11 @@ object Graphs {
     // small graphs take the argmax rounds in driver arrays — integer
     // weights and the (wt desc, lab asc) pick make the round a pure
     // function of the labeling, identical on either path (spec-pinned;
-    // see DriverMaxGraphEdges). The gate count() is one full
+    // see DriverLoop). The gate count() is one full
     // materialization of the cached edge relation, which the round loop
     // (either path) needs anyway — the billion-edge distributed branch
     // pays it as its cache warm-up, not as extra work.
-    if (sym.count() <= driverMaxEdges)
+    if (sym.count() <= DriverLoop.maxRows)
       return labelPropagationDriver(edges.sparkSession, sym.collect(), rounds)
     val vertices = Caches.register(
       sym.select(col("src").as("id")).union(sym.select(col("dst").as("id"))).distinct())
@@ -671,15 +649,9 @@ object Graphs {
       spark: org.apache.spark.sql.SparkSession,
       symRows: Array[org.apache.spark.sql.Row],
       rounds: Int): DataFrame = {
-    val idx = new java.util.HashMap[java.lang.Long, java.lang.Integer]()
-    val vertsBuf = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def vid(id: Long): Int = {
-      val got = idx.get(id)
-      if (got != null) got.intValue
-      else { val i = vertsBuf.length; idx.put(id, i); vertsBuf += id; i }
-    }
+    val vid = new VertexIndex
     val edges = symRows.map(r => (vid(r.getLong(0)), vid(r.getLong(1)), r.getLong(2)))
-    val verts = vertsBuf.toArray
+    val verts = vid.verts
     val n = verts.length
     var lab = Array.tabulate(n)(i => verts(i))
     for (_ <- 1 to rounds) {
@@ -723,8 +695,7 @@ object Graphs {
     * equi-shuffles on the vertex key. localCheckpoint per round keeps
     * the loop's lineage flat. */
   def bfs(edges: DataFrame, srcCol: String, dstCol: String,
-      source: Long, maxHops: Int,
-      driverMaxEdges: Long = DriverMaxGraphEdges): DataFrame = {
+      source: Long, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops=$maxHops must be >= 1")
     val e = Caches.register(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
@@ -732,11 +703,11 @@ object Graphs {
     val spark = edges.sparkSession
     import spark.implicits._
     // small graphs expand in a driver adjacency map — min-hop frontier
-    // semantics are identical by construction (see DriverMaxGraphEdges).
+    // semantics are identical by construction (see DriverLoop).
     // The gate count() doubles as the cache warm-up for the cached edge
     // relation both branches read, so the distributed path pays no extra
     // job for the gate.
-    if (e.count() <= driverMaxEdges) {
+    if (e.count() <= DriverLoop.maxRows) {
       val adj = scala.collection.mutable.HashMap
         .empty[Long, scala.collection.mutable.ArrayBuffer[Long]]
       e.collect().foreach { r =>

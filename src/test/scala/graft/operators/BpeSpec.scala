@@ -50,12 +50,12 @@ class BpeSpec extends SparkSpec {
     val words = Seq(("lowest", 7L), ("lower", 11L), ("low", 20L),
       ("newest", 9L), ("newer", 5L), ("new", 13L), ("widest", 3L),
       ("wide", 8L), ("ab", 2L), ("ba", 2L))
-    def run(gate: Long) =
-      Bpe.learnMerges(words.toDF("word", "freq"), "word", "freq", 10,
-          driverMaxVocab = gate)
+    def run(gate: Long) = DriverLoop.withMaxRows(gate) {
+      Bpe.learnMerges(words.toDF("word", "freq"), "word", "freq", 10)
         .orderBy("rank").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
         .toSeq
-    assert(run(Bpe.DriverMaxVocab) === run(0L))
+    }
+    assert(run(DriverLoop.MaxRows) === run(0L))
   }
 }

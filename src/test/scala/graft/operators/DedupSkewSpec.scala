@@ -98,16 +98,20 @@ class DedupSkewSpec extends SparkSpec {
     val comp = Dedup.connectedComponents(pairChain)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(comp === expected)
-    // driverMaxEdges = 0 forces the distributed min-label loop — both
-    // paths must produce identical labels
-    val loop = Dedup.connectedComponents(pairChain, driverMaxEdges = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    // a driver-loop bound of 0 forces the distributed min-label loop —
+    // both paths must produce identical labels
+    val loop = DriverLoop.withMaxRows(0L) {
+      Dedup.connectedComponents(pairChain)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    }
     assert(loop === expected)
     // an under-provisioned maxIter fails LOUDLY on the loop path —
     // unconverged labels would split one real cluster into several,
     // silently keeping dups (the driver path needs no iteration bound)
     val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(pairChain, maxIter = 1, driverMaxEdges = 0L).collect()
+      DriverLoop.withMaxRows(0L) {
+        Dedup.connectedComponents(pairChain, maxIter = 1).collect()
+      }
     }
     assert(e.getMessage.contains("did not converge"))
   }
@@ -148,13 +152,16 @@ class DedupSkewSpec extends SparkSpec {
     import spark.implicits._
     val pairChain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L))
       .toDF("id_a", "id_b")
-    val local = Dedup.connectedComponents(pairChain, driverMaxEdges = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val local = DriverLoop.withMaxRows(0L) {
+      Dedup.connectedComponents(pairChain)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    }
     val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
     try {
-      val durable = Dedup.connectedComponents(pairChain, driverMaxEdges = 0L,
-          checkpointDir = Some(dir))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      val durable = DriverLoop.withMaxRows(0L) {
+        Dedup.connectedComponents(pairChain, checkpointDir = Some(dir))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      }
       assert(durable === local)
       // the durable path wrote RDD checkpoints AND reclaimed every
       // superseded generation: only the final labels' generation may
@@ -187,7 +194,7 @@ class DedupSkewSpec extends SparkSpec {
     import spark.implicits._
     val intPairs = Seq((1, 2), (2, 3)).toDF("id_a", "id_b") // IntegerType in
     val driver = Dedup.connectedComponents(intPairs)
-    val loop = Dedup.connectedComponents(intPairs, driverMaxEdges = 0L)
+    val loop = DriverLoop.withMaxRows(0L)(Dedup.connectedComponents(intPairs))
     // output schema is (id long, label long) regardless of path
     assert(driver.schema.map(_.dataType).forall(_ ===
       org.apache.spark.sql.types.LongType))

@@ -300,7 +300,7 @@ class GraphsSpec extends SparkSpec {
       val prop = labelsOf(Dedup.connectedComponents(df, maxIter = 80))
       assert(star === prop, s"$name: star-contraction labels diverge")
       // distributed-loop path too (driver fast path disabled)
-      val loop = labelsOf(Dedup.connectedComponents(df, maxIter = 80, driverMaxEdges = 0))
+      val loop = DriverLoop.withMaxRows(0L)(labelsOf(Dedup.connectedComponents(df, maxIter = 80)))
       assert(star === loop, s"$name: star labels diverge from the distributed loop")
     }
   }

@@ -144,6 +144,23 @@ class DashboardServerSpec extends SparkSpec {
     assert(!s.cached.storageLevel.useMemory, "stop() must unpersist the cache")
   }
 
+  test("edaSummary: per-column missing counts, (missing_pct desc, column) order, empty input is 0.0") {
+    val rows = ListingQueries.edaSummary(clean).collect()
+      .map(r => (r.getString(0), r.getLong(2), r.getDouble(3))).toSeq
+    assert(rows.map(_._1).sorted === clean.columns.toSeq.sorted)
+    rows.foreach { case (c, missing, _) =>
+      assert(missing === clean.filter(col(c).isNull).count(), c)
+    }
+    assert(rows.exists(_._2 > 0L), "the fixture carries missing values")
+    assert(rows === rows.sortBy { case (c, _, pct) => (-pct, c) })
+    val empty = ListingQueries.edaSummary(clean.filter(lit(false))).collect()
+    assert(empty.length === clean.columns.length)
+    empty.foreach { r =>
+      assert(r.getLong(2) === 0L)
+      assert(r.getDouble(3) === 0.0, r.getString(0))
+    }
+  }
+
   test("JSON writer escapes per RFC 8259") {
     assert(DashboardServer.jsonStr("a\"b\\c\nd") === "\"a\\\"b\\\\c\\nd\"")
     assert(DashboardServer.jsonStr("\u0001") === "\"\\u0001\"")
