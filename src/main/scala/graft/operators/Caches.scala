@@ -24,25 +24,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Caches {
 
-  /** Default upper bound on remembered caches per session; the oldest
-    * entry is unpersisted when a new registration would exceed it.
-    * Operator caches are consumed within one query, so 64 is generous
-    * headroom for even deeply composed pipelines. Override per session
-    * with conf [[CapConf]]. */
+  /** Upper bound on remembered caches per session; the oldest entry is
+    * unpersisted when a new registration would exceed it. Operator
+    * caches are consumed within one query, so 64 is generous headroom
+    * for even deeply composed pipelines. */
   val MaxPerSession = 64
-
-  /** Session conf key overriding [[MaxPerSession]] for that session. */
-  val CapConf = "spark.graft.caches.maxPerSession"
-
-  private def cap(spark: SparkSession): Int =
-    spark.conf.getOption(CapConf).map { v =>
-      val n =
-        try v.toInt
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(s"$CapConf must be an integer, got '$v'") }
-      require(n >= 1, s"$CapConf must be >= 1, got $n")
-      n
-    }.getOrElse(MaxPerSession)
 
   private val refs =
     scala.collection.mutable.LinkedHashMap.empty[SparkSession,
@@ -56,12 +42,12 @@ object Caches {
     purgeStopped()
     val buf = refs.getOrElseUpdate(df.sparkSession,
       scala.collection.mutable.ArrayBuffer.empty[DataFrame])
-    if (buf.size >= cap(df.sparkSession)) {
+    if (buf.size >= MaxPerSession) {
       // a long composed pipeline can still hold a lazy plan over the
       // evicted cache — that plan silently recomputes, so say which one
       val evicted = buf.remove(0)
       System.err.println(
-        s"[caches] cap (${cap(df.sparkSession)}, conf $CapConf) reached — " +
+        s"[caches] cap ($MaxPerSession) reached — " +
           s"unpersisting oldest cached plan; later reuse of it will recompute: " +
           evicted.queryExecution.logical.nodeName + " " +
           evicted.schema.fieldNames.take(6).mkString("(", ", ", ", ...)"))
@@ -73,15 +59,9 @@ object Caches {
 
   /** Unpersist every operator-cached DataFrame of every live session
     * registered so far. */
-  def unpersistAll(blocking: Boolean = false): Unit = synchronized {
+  def unpersistAll(): Unit = synchronized {
     purgeStopped()
-    refs.valuesIterator.foreach(_.foreach(_.unpersist(blocking)))
+    refs.valuesIterator.foreach(_.foreach(_.unpersist()))
     refs.clear()
-  }
-
-  /** Unpersist only the given session's operator caches. */
-  def unpersistAll(spark: SparkSession, blocking: Boolean): Unit = synchronized {
-    purgeStopped()
-    refs.remove(spark).foreach(_.foreach(_.unpersist(blocking)))
   }
 }

@@ -327,15 +327,10 @@ object Dedup {
     * vertex — the result relation itself) — see [[driverComponents]];
     * the distributed loop is the above-bound path.
     *
-    * SINGLE-WRITER session assumption (loop path only): the rounds run
-    * under a session-global spark.sql.shuffle.partitions override
-    * (restored in a finally) — a concurrent query planned on the SAME
-    * SparkSession during the loop would pick up the graph-sized value.
-    * Durable mode additionally repoints the CONTEXT-global checkpoint
-    * directory per generation — a concurrent job's checkpoints would
-    * land in (and be reclaimed from) this operator's subdirectories.
-    * The sequential Verify/Bench harness satisfies this; concurrent use
-    * needs a dedicated session. */
+    * The loop path's rounds run at [[DriverLoop.roundPartitions]]
+    * under [[graft.Sessions.withConfs]] and checkpoint through
+    * [[DriverLoop.RoundCheckpoints]] — see both for their single-writer
+    * caveats. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 10,
       checkpointDir: Option[String] = None): DataFrame = {
     require(maxIter > 0, s"maxIter=$maxIter must be positive")
@@ -346,30 +341,15 @@ object Dedup {
     // the truncated plan cannot recompute them). Identical labels either
     // way — only the storage of the per-round materialization moves.
     //
-    // STORAGE HYGIENE: each checkpoint generation gets its own
-    // subdirectory (setCheckpointDir before every checkpoint) and a
-    // superseded generation is DELETED as soon as the next one is
-    // materialized — Spark never cleans reliable checkpoints itself
-    // (spark.cleaner...cleanCheckpoints defaults to false), so a
-    // d-round graph would otherwise leave d+2 copies of graph-sized
-    // state on cluster storage, unbounded across invocations. Only the
-    // returned relation's own checkpoint (and, while the loop runs, the
-    // edge set) stays on disk.
+    // STORAGE HYGIENE: a superseded generation is DELETED as soon as
+    // the next one is materialized — Spark never cleans reliable
+    // checkpoints itself (spark.cleaner...cleanCheckpoints defaults to
+    // false), so a d-round graph would otherwise leave d+2 copies of
+    // graph-sized state on cluster storage, unbounded across
+    // invocations. Only the returned relation's own checkpoint (and,
+    // while the loop runs, the edge set) stays on disk.
     val spark = pairs.sparkSession
-    var ckptGen = 0
-    def ckptSubdir(gen: Int) = checkpointDir.map(d => s"$d/gen-$gen")
-    def rmCkptGen(gen: Int): Unit = ckptSubdir(gen).foreach { d =>
-      val path = new org.apache.hadoop.fs.Path(d)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(path, true) // idempotent; false if absent
-    }
-    def ckpt(df: DataFrame): DataFrame =
-      if (checkpointDir.isEmpty) df.localCheckpoint()
-      else {
-        spark.sparkContext.setCheckpointDir(ckptSubdir(ckptGen).get)
-        ckptGen += 1
-        df.checkpoint()
-      }
+    val ckpt = new DriverLoop.RoundCheckpoints(spark, checkpointDir)
     // ids normalize to LongType UP FRONT so both closure paths (driver
     // union-find and distributed loop) return the identical (id long,
     // label long) schema — without this the output type would depend on
@@ -425,20 +405,12 @@ object Dedup {
       // driverComponents materializes into driver arrays and returns a
       // local-rows relation — the edge checkpoint is dead once it returns
       val out = driverComponents(spark, edgesCk)
-      rmCkptGen(0)
+      ckpt.delete(0)
       return out
     }
-    // size the ROUND shuffles to the graph, not the corpus: each of the
-    // ~diameter rounds pays per-partition task overhead on every shuffle.
-    // One partition per ~250k edges, capped at the session setting so a
-    // genuinely huge graph still spreads out.
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val graphParts = math.max(1L, math.min(sessionParts.toLong,
-      nEdges / 250000L + 1L)).toInt
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     var labels = ckpt(edgesCk.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")))
-    var labelsGen = ckptGen - 1 // the generation holding `labels`
+    var labelsGen = ckpt.generations - 1 // the generation holding `labels`
     // convergence detection without a per-round join: the id set is fixed
     // (the union keeps every labeled id in play) and labels only ever
     // DECREASE under min-propagation, so "any label moved" ⇔ "the exact
@@ -467,8 +439,8 @@ object Dedup {
     // maxIter bounds LABEL-MOVING rounds; one extra round runs to CONFIRM
     // convergence (a graph of diameter exactly maxIter converges on its
     // final permitted round, which is only observable one round later)
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", graphParts.toString)
+    graft.Sessions.withConfs(spark,
+        "spark.sql.shuffle.partitions" -> DriverLoop.roundPartitions(spark, nEdges).toString) {
       while (changed && i < maxIter + 1) {
         val next = ckpt(edgesCk.join(labels, edgesCk("src") === labels("id"))
           .select(col("dst").as("id"), col("label"))
@@ -480,11 +452,11 @@ object Dedup {
         labels = next
         // `next` is materialized (checkpoint is eager) — the previous
         // round's generation is now unreferenced; reclaim it
-        rmCkptGen(labelsGen)
-        labelsGen = ckptGen - 1
+        ckpt.delete(labelsGen)
+        labelsGen = ckpt.generations - 1
         i += 1
       }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     // unconverged labels are WRONG labels (one cluster reported as
     // several) — a dedup pipeline must fail loudly, not keep duplicates
     if (changed) throw new IllegalStateException(
@@ -493,7 +465,7 @@ object Dedup {
     // the loop is done: the edge set's generation is dead too. Only the
     // final labels' generation remains on disk — it backs the returned
     // relation until the caller consumes it.
-    rmCkptGen(0)
+    ckpt.delete(0)
     labels
   }
 

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 import scala.util.DynamicVariable
 
 /** The one driver-memory policy for iterative operators. A gated site
@@ -9,7 +11,11 @@ import scala.util.DynamicVariable
   * fixed point in driver arrays, above it the identical arithmetic runs
   * as distributed rounds. The bound is a ROW COUNT on the collapsed
   * relation, never a fraction of the corpus: 2e6 rows is about 50 MB of
-  * driver arrays, the order of a broadcast-join build side. */
+  * driver arrays, the order of a broadcast-join build side.
+  *
+  * The distributed rounds share two more pieces: [[roundPartitions]]
+  * sizes their shuffles and [[RoundCheckpoints]] truncates their
+  * lineage. */
 object DriverLoop {
 
   val MaxRows: Long = 2000000L
@@ -24,4 +30,48 @@ object DriverLoop {
     * is how specs pin the two paths equal. */
   private[graft] def withMaxRows[T](n: Long)(body: => T): T =
     bound.withValue(n)(body)
+
+  /** Shuffle partitions for the rounds over a `rows`-row graph: one per
+    * 250k rows, capped at the session setting so a genuinely huge graph
+    * still spreads out. Every round pays per-partition task overhead on
+    * each of its shuffles, and the round state is graph-sized, not
+    * corpus-sized. Sites apply it through [[graft.Sessions.withConfs]]. */
+  private[graft] def roundPartitions(spark: SparkSession, rows: Long): Int = {
+    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    math.max(1L, math.min(sessionParts, rows / 250000L + 1L)).toInt
+  }
+
+  /** Lineage truncation for a round loop: each round references the
+    * previous one, so an uncut plan grows per round and Catalyst analysis
+    * goes exponential. `dir = None` checkpoints into executor memory
+    * (`localCheckpoint`); `Some(dir)` writes a DURABLE `checkpoint()`
+    * that survives executor loss, one `dir/gen-N` subdirectory per
+    * generation so the loop can [[delete]] superseded ones — Spark never
+    * cleans reliable checkpoints itself.
+    *
+    * Durable mode repoints the CONTEXT-global checkpoint directory per
+    * generation: a concurrent job's checkpoints would land in (and be
+    * reclaimed from) this loop's subdirectories. */
+  private[graft] final class RoundCheckpoints(spark: SparkSession, dir: Option[String]) {
+    private var gen = 0
+
+    /** Durable generations written so far (0 in local mode); the latest
+      * is `generations - 1`. */
+    def generations: Int = gen
+
+    /** Materializes `df` and returns the truncated relation. */
+    def apply(df: DataFrame): DataFrame = dir match {
+      case None => df.localCheckpoint()
+      case Some(d) =>
+        spark.sparkContext.setCheckpointDir(s"$d/gen-$gen")
+        gen += 1
+        df.checkpoint()
+    }
+
+    /** Deletes durable generation `g` (idempotent; a no-op in local mode). */
+    def delete(g: Int): Unit = dir.foreach { d =>
+      val path = new org.apache.hadoop.fs.Path(s"$d/gen-$g")
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
+    }
+  }
 }

@@ -71,7 +71,9 @@ object Graphs {
     * collect, so the driver never sees a corpus row — only the same
     * graph every iteration would otherwise re-shuffle. A durable
     * `checkpointDir` forces the distributed loop (executor-loss
-    * durability is the caller's explicit ask). */
+    * durability is the caller's explicit ask). The distributed rounds
+    * run at [[DriverLoop.roundPartitions]] with auto-broadcast off, both
+    * set through [[graft.Sessions.withConfs]]. */
   def pagerank(
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
       iterations: Int, dampingPct: Int = 85,
@@ -121,25 +123,11 @@ object Graphs {
 
     // each generation is CHECKPOINTED, not merely cached: rank_i reads
     // rank_{i-1} twice (dangling scan + contribution join), so an uncut
-    // lineage doubles per round and Catalyst analysis goes exponential
-    // in `iterations` — the same blowup connectedComponents cuts
-    // (Dedup.scala). localCheckpoint by default; a durable checkpointDir
-    // survives executor loss on long cluster jobs, with superseded
-    // generations reclaimed as the loop advances.
+    // lineage doubles per round (see DriverLoop.RoundCheckpoints); a
+    // durable checkpointDir reclaims superseded generations as the loop
+    // advances.
     val spark = edges.sparkSession
-    var ckptGen = 0
-    def ckptSubdir(gen: Int) = checkpointDir.map(d => s"$d/gen-$gen")
-    def rmCkptGen(gen: Int): Unit = ckptSubdir(gen).foreach { d =>
-      val path = new org.apache.hadoop.fs.Path(d)
-      path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
-    }
-    def ckpt(df: DataFrame): DataFrame =
-      if (checkpointDir.isEmpty) df.localCheckpoint()
-      else {
-        spark.sparkContext.setCheckpointDir(ckptSubdir(ckptGen).get)
-        ckptGen += 1
-        df.checkpoint()
-      }
+    val ckpt = new DriverLoop.RoundCheckpoints(spark, checkpointDir)
 
     // dangling vertices are a property of the GRAPH, not of a round —
     // detect once on the cached vertex/source relations; a dangling-free
@@ -148,25 +136,14 @@ object Graphs {
     val hasDangling =
       vertices.join(srcSet, Seq("id"), "left_anti").limit(1).count() > 0
 
-    // size the ROUND shuffles to the graph, not the session default:
-    // every round pays per-partition task overhead on the contribution
-    // shuffle, and the rank relation is graph-sized. Same session-global
-    // override + SINGLE-WRITER assumption as Dedup.connectedComponents
-    // (restored in a finally; a concurrent query planned on this session
-    // during the loop would pick up the graph-sized value).
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val graphParts = math.max(1L, math.min(sessionParts.toLong,
-      nEdges / 250000L + 1L)).toInt
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevBcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", graphParts.toString)
-      // rank and edge relations are graph-sized: at scale NEITHER side of
-      // the round joins may broadcast, and locally the sub-10MB cached
-      // relations otherwise get re-broadcast (driver-side hash build +
-      // GC churn) every round — the r6 bench's erratic per-round spikes.
-      // Explicit broadcast() hints (the 1-row dangling total) still apply.
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // rank and edge relations are graph-sized: at scale NEITHER side of
+    // the round joins may broadcast, and locally the sub-10MB cached
+    // relations otherwise get re-broadcast (driver-side hash build +
+    // GC churn) every round — the r6 bench's erratic per-round spikes.
+    // Explicit broadcast() hints (the 1-row dangling total) still apply.
+    graft.Sessions.withConfs(spark,
+        "spark.sql.shuffle.partitions" -> DriverLoop.roundPartitions(spark, nEdges).toString,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       var ranks = ckpt(vertices.select(col("id"),
         when(isTele, lit(RankScale / nT)).otherwise(lit(0L)).as("rank_fp")))
       for (_ <- 1 to iterations) {
@@ -188,13 +165,11 @@ object Graphs {
             when(isTele, expr(s"dang DIV $nT")).otherwise(lit(0L)))
           .select(col("id"),
             (base + expr(s"$dampingPct * _in DIV 100")).as("rank_fp")))
-        if (ckptGen >= 3) rmCkptGen(ckptGen - 3) // keep current + parent
+        // keep current + parent
+        if (ckpt.generations >= 3) ckpt.delete(ckpt.generations - 3)
       }
       ranks.select(col("id"), col("rank_fp"),
         round(col("rank_fp").cast("double") / RankScale, 6).as("rank"))
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBcast)
     }
   }
 
@@ -307,7 +282,9 @@ object Graphs {
     * the final left joins).
     *
     * Graphs of at most [[DriverLoop.maxRows]] distinct edges run the
-    * identical BigInt fixed point in driver arrays. */
+    * identical BigInt fixed point in driver arrays. The distributed
+    * rounds run at [[DriverLoop.roundPartitions]] with auto-broadcast
+    * off, both set through [[graft.Sessions.withConfs]]. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations=$iterations must be >= 1")
@@ -321,10 +298,6 @@ object Graphs {
       return hitsDriver(spark, e.collect(), iterations)
     val vertices = Caches.register(
       e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct())
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val graphParts = math.max(1L, math.min(sessionParts.toLong,
-      nEdges / 250000L + 1L)).toInt
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     // floor(raw·SCALE / Σraw), widened through DECIMAL(38,0); Spark's
     // `div` on decimals is integral division returning BIGINT — the
     // exact mirror of DuckDB's HUGEINT `//`.
@@ -345,14 +318,13 @@ object Graphs {
         .select(col("id"),
           expr(s"CAST((CAST(raw AS DECIMAL(38,0)) * $HitsScale) DIV s AS BIGINT)").as(out))
     }
-    val prevBcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", graphParts.toString)
-      // no auto-broadcast in the loop: score relations are vertex-sized
-      // (huge at scale) and locally the repeated driver-side hash builds
-      // were the r6 bench's dominant q_hits cost; the explicit 1-row
-      // total broadcast() hints in rescale are unaffected
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // no auto-broadcast in the loop: score relations are vertex-sized
+    // (huge at scale) and locally the repeated driver-side hash builds
+    // were the r6 bench's dominant q_hits cost; the explicit 1-row
+    // total broadcast() hints in rescale are unaffected
+    graft.Sessions.withConfs(spark,
+        "spark.sql.shuffle.partitions" -> DriverLoop.roundPartitions(spark, nEdges).toString,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // the init relation needs no checkpoint — its lineage is one
       // projection over the cached vertex set; round 1's checkpoint cuts it
       var h = vertices.select(col("id"), lit(HitsScale).as("h_fp"))
@@ -377,9 +349,6 @@ object Graphs {
         .select(col("id"),
           coalesce(col("h_fp"), lit(0L)).as("hub_fp"),
           coalesce(col("a_fp"), lit(0L)).as("auth_fp"))
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBcast)
     }
   }
 
@@ -451,7 +420,9 @@ object Graphs {
     * fixpoint); `maxIter` bounds adversarial chains — hitting it THROWS,
     * because a partially-peeled graph is not a k-core. Peel-round count
     * is bounded by the longest degeneracy chain, not corpus size —
-    * single digits on real graphs. */
+    * single digits on real graphs. Rounds run at
+    * [[DriverLoop.roundPartitions]] with auto-broadcast off, both set
+    * through [[graft.Sessions.withConfs]]. */
   def kcore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxIter: Int = 30): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
@@ -460,8 +431,6 @@ object Graphs {
         col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
     val spark = edges.sparkSession
-    // graph-sized round shuffles, like pagerank (single-writer session
-    // assumption; restored in the finally)
     var und = e.union(e.select(col("b").as("a"), col("a").as("b")))
       .distinct().localCheckpoint()
     val nEdges = und.count()
@@ -470,37 +439,32 @@ object Graphs {
     // reads the just-checkpointed symmetric relation, no rescan)
     if (nEdges <= DriverLoop.maxRows)
       return kcoreDriver(spark, und.collect(), k, maxIter)
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val graphParts = math.max(1L, math.min(sessionParts.toLong,
-      nEdges / 250000L + 1L)).toInt
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevBcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", graphParts.toString)
-      // survivor set is vertex-sized — never auto-broadcast it (see hits)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // the survivor set is vertex-sized — never auto-broadcast it (see hits)
+    graft.Sessions.withConfs(spark,
+        "spark.sql.shuffle.partitions" -> DriverLoop.roundPartitions(spark, nEdges).toString,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       var prevCount = Long.MaxValue
+      var core: Option[DataFrame] = None
       var i = 0
       var deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
-      while (i < maxIter) {
+      while (core.isEmpty && i < maxIter) {
         val keep = deg.filter(col("deg") >= k).localCheckpoint()
         val n = keep.count()
-        if (n == prevCount) return keep // fixpoint: nothing peeled
-        if (n == 0L) return keep        // everything peeled: empty core
-        prevCount = n
-        und = und
-          .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
-          .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-          .localCheckpoint()
-        deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
-        i += 1
+        // fixpoint (nothing peeled) or everything peeled (empty core)
+        if (n == prevCount || n == 0L) core = Some(keep)
+        else {
+          prevCount = n
+          und = und
+            .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
+            .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
+            .localCheckpoint()
+          deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
+          i += 1
+        }
       }
-      throw new IllegalStateException(
+      core.getOrElse(throw new IllegalStateException(
         s"Graphs.kcore: no fixpoint after maxIter=$maxIter peel rounds — " +
-          "raise maxIter (a partially-peeled graph is not a k-core)")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBcast)
+          "raise maxIter (a partially-peeled graph is not a k-core)"))
     }
   }
 
@@ -785,7 +749,9 @@ object Graphs {
     * Scale: edge relation only ever shrinks (star contraction never
     * adds edges beyond the re-attachments it removes); every shuffle is
     * keyed on a vertex; the driver sees one 2-column checksum row per
-    * round and never a vertex. */
+    * round and never a vertex. Rounds run at
+    * [[DriverLoop.roundPartitions]], set through
+    * [[graft.Sessions.withConfs]]. */
   def bigStarComponents(pairs: DataFrame, maxIter: Int = 40): DataFrame = {
     import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType}
     Seq("id_a", "id_b").foreach { c =>
@@ -826,21 +792,16 @@ object Graphs {
       (r.getLong(0), Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
     }
     var prev = checksum(e)
-    // size the round shuffles to the GRAPH, not the corpus (the
-    // Dedup.connectedComponents discipline): each of the O(log n) rounds
-    // pays per-partition task overhead on four keyed shuffles, and the
+    // size the round shuffles to the GRAPH, not the corpus
+    // (DriverLoop.roundPartitions): each of the O(log n) rounds pays
+    // per-partition task overhead on four keyed shuffles, and the
     // post-blocking pair graph is orders of magnitude smaller than the
-    // corpus that produced it. Same single-writer session assumption as
-    // connectedComponents' loop (restored in the finally).
+    // corpus that produced it
     val spark = pairs.sparkSession
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val graphParts = math.max(1L, math.min(sessionParts.toLong,
-      prev._1 / 250000L + 1L)).toInt
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     var converged = false
     var round = 0
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", graphParts.toString)
+    graft.Sessions.withConfs(spark,
+        "spark.sql.shuffle.partitions" -> DriverLoop.roundPartitions(spark, prev._1).toString) {
       // Round shape note (r16): an "attach to the per-key minimum" could
       // also be ONE window min over the key instead of rollup + equi-join
       // back — measured on the sf0.1 pair graph the two are
@@ -877,7 +838,7 @@ object Graphs {
         prev = cur
         round += 1
       }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     if (!converged) throw new IllegalStateException(
       s"bigStarComponents: no fixpoint after $maxIter rounds — " +
         "raise maxIter (paper bound is ~2*log2(n) rounds)")

@@ -18,6 +18,17 @@ import org.apache.spark.sql.Row
   */
 object EventsStream {
 
+  /** spark.sql.shuffle.partitions while a runner's stream is live: every
+    * stateful operator opens one state store PER shuffle partition per
+    * micro-batch, and a short AvailableNow run is dominated by that
+    * per-store fixed cost (open, delta write, commit), not by data
+    * volume. 4 stores measured best for these state sizes on local[32]
+    * (vs 32: q_stream_join 7.1→2.6 s steady at sf0.1); a DURABLE
+    * deployment sizes this to peak state volume instead — the count is
+    * baked into the checkpoint at first batch and cannot change across
+    * restarts. */
+  private val StatePartitions = "4"
+
   /** The events table schema parameterized by how the parquet files
     * present `ts` — LongType nanos under the legacy nanosAsLong conf for
     * the TIMESTAMP(NANOS) data generation, TIMESTAMP_NTZ for the
@@ -111,28 +122,13 @@ object EventsStream {
     * that must emit EVERY window at end-of-stream (in Append mode, windows
     * newer than the final watermark stay in state and never emit).
     *
-    * `statePartitions` overrides spark.sql.shuffle.partitions for the
-    * stream's lifetime (restored after): every stateful operator opens
-    * one state store PER shuffle partition per micro-batch, and a short
-    * AvailableNow run is dominated by that per-store fixed cost (open,
-    * delta write, commit), not by data volume. 4 stores measured best
-    * for these state sizes on local[32] (vs 32: q_stream_join 7.1→2.6 s
-    * steady at sf0.1); a DURABLE deployment sizes this to peak state
-    * volume instead — the count is baked into the checkpoint at first
-    * batch and cannot change across restarts.
-    *
-    * SINGLE-WRITER session assumption: the override is session-global
-    * for the stream's duration (restored in a finally) — a concurrent
-    * query planned on the same SparkSession meanwhile would pick up the
-    * small value. The sequential Verify/Bench harness satisfies this;
-    * concurrent use needs a dedicated session. */
+    * The stream runs at [[StatePartitions]] shuffle partitions, set
+    * through [[graft.Sessions.withConfs]] for its lifetime. */
   def runAvailableNow(
       spark: SparkSession, query: DataFrame, name: String,
-      checkpoint: String, mode: OutputMode = OutputMode.Append,
-      statePartitions: Int = 4): DataFrame = {
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+      checkpoint: String, mode: OutputMode = OutputMode.Append): DataFrame =
+    try graft.Sessions.withConfs(spark,
+        "spark.sql.shuffle.partitions" -> StatePartitions) {
       val q = query.writeStream
         .format("memory")
         .queryName(name)
@@ -153,11 +149,9 @@ object EventsStream {
     } finally {
       // failure paths must clean up too — checkpoints may live in
       // RAM-backed /dev/shm (ephemeralCheckpoint) and leaks accumulate
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       try spark.catalog.dropTempView(name) catch { case _: Exception => () }
       deleteRecursively(new java.io.File(checkpoint))
     }
-  }
 
   /** SPARK_GRAFT_STREAM_DEBUG=1 dumps per-query micro-batch counts —
     * the evidence behind SCALING.md's "fixed micro-batch overhead, not
@@ -202,11 +196,10 @@ object EventsStream {
     * At scale this is the warehouse ingest pattern: the state table
     * would be key-bucketed so each merge is a co-located join, and the
     * generation swap becomes the table format's atomic commit. Returns
-    * the final state. */
+    * the final state. Runs at [[StatePartitions]], like
+    * [[runAvailableNow]]. */
   def runUpsert(spark: SparkSession, events: DataFrame, name: String,
-      checkpoint: String, stateDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
+      checkpoint: String, stateDir: String): DataFrame = {
     // checkpoint and state MUST start together: state is wiped for a
     // fresh fold, so a surviving checkpoint from a killed prior run
     // (finally skipped) would make AvailableNow skip already-committed
@@ -218,8 +211,8 @@ object EventsStream {
       .getOrElse(Array.empty).toSeq
       .filter(f => f.isDirectory && f.getName.startsWith("gen-"))
       .map(_.getName.stripPrefix("gen-").toLong).sorted
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+    try graft.Sessions.withConfs(spark,
+        "spark.sql.shuffle.partitions" -> StatePartitions) {
       val q = events.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
           val s = batch.sparkSession
@@ -280,9 +273,6 @@ object EventsStream {
       val last = gens().lastOption.getOrElse(throw new IllegalStateException(
         s"streaming upsert $name produced no state generation (empty source?)"))
       spark.read.parquet(s"$stateDir/gen-$last")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      deleteRecursively(new java.io.File(checkpoint))
-    }
+    } finally deleteRecursively(new java.io.File(checkpoint))
   }
 }

@@ -70,8 +70,8 @@ object TopKState {
   /** Fold `events` (needs user_id, event_id, value) through the
     * processor with Trigger.AvailableNow; returns the end-of-stream
     * top-k per user as (user_id, rank, event_id, cents). Requires the
-    * RocksDB state store for the stream's lifetime (same single-writer
-    * session assumption as [[UserStats.runningStats]]). */
+    * RocksDB state store, set through [[graft.Sessions.withConfs]] for
+    * the stream's lifetime. */
   def topK(spark: SparkSession, events: DataFrame, k: Int, name: String,
       checkpoint: String): DataFrame = {
     import spark.implicits._
@@ -89,11 +89,9 @@ object TopKState {
     val out = in.groupByKey(_.user_id)
       .transformWithState(new Proc(k), TimeMode.None(), OutputMode.Update(),
         Encoders.product[Out])
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    graft.Sessions.withConfs(spark,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val emitted = EventsStream.runAvailableNow(spark, out.toDF(), name,
         checkpoint, OutputMode.Update())
       // final state per key = its max-n_seen emission group (n_seen is
@@ -103,11 +101,6 @@ object TopKState {
       emitted.withColumn("_mx", max(col("n_seen")).over(w))
         .filter(col("n_seen") === col("_mx"))
         .select(col("user_id"), col("rank"), col("event_id"), col("cents"))
-    } finally prevProvider match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 }

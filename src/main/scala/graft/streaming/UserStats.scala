@@ -66,9 +66,8 @@ object UserStats {
     * the sum is order-independent (exact, engine-portable).
     *
     * transformWithState requires the RocksDB state store; the provider
-    * is set for the stream's lifetime and restored after (same
-    * single-writer session assumption as runAvailableNow's partition
-    * override). */
+    * is set through [[graft.Sessions.withConfs]] for the stream's
+    * lifetime. */
   def runningStats(spark: SparkSession, events: DataFrame, name: String,
       checkpoint: String): DataFrame = {
     import spark.implicits._
@@ -79,11 +78,9 @@ object UserStats {
     val out = in.groupByKey(_.user_id)
       .transformWithState(new Proc, TimeMode.None(), OutputMode.Update(),
         Encoders.product[Out])
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    try {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    graft.Sessions.withConfs(spark,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val emitted = EventsStream.runAvailableNow(spark, out.toDF(), name,
         checkpoint, OutputMode.Update())
       // final state per user = its last (max-n) emission; n is strictly
@@ -92,11 +89,6 @@ object UserStats {
         .partitionBy(col("user_id")).orderBy(col("n_events").desc)
       emitted.withColumn("_rk", row_number().over(w))
         .filter(col("_rk") === 1).drop("_rk")
-    } finally prevProvider match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 }

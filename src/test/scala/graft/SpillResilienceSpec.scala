@@ -16,15 +16,6 @@ class SpillResilienceSpec extends SparkSpec {
 
   private val Dir = "/root/testdata/sf0.01"
 
-  private def withConfs(kvs: (String, String)*)(body: => Unit): Unit = {
-    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try { kvs.foreach { case (k, v) => spark.conf.set(k, v) }; body }
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("window + sort-merge join complete identically under forced disk spill") {
     // window over 3 fat partitions (l_returnflag) + an SMJ whose
     // buffered-match groups exceed a 16-row threshold — both operators
@@ -52,7 +43,7 @@ class SpillResilienceSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      withConfs(
+      Sessions.withConfs(spark,
         "spark.sql.windowExec.buffer.spill.threshold" -> "128",
         "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "16",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -94,7 +85,7 @@ class SpillResilienceSpec extends SparkSpec {
       s"q_kmv_distinct must aggregate via ObjectHashAggregateExec:\n$plan")
     for (name <- Seq("q_kmv_distinct", "q_hll_rollup")) {
       val baseline = run(name)
-      withConfs(
+      Sessions.withConfs(spark,
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "1",
         "spark.sql.shuffle.partitions" -> "1") {
         assert(run(name) === baseline,
@@ -113,7 +104,7 @@ class SpillResilienceSpec extends SparkSpec {
     assert(plan.contains("ObjectHashAggregate"),
       s"q_array_agg must aggregate via ObjectHashAggregateExec:\n$plan")
     val baseline = run()
-    withConfs(
+    Sessions.withConfs(spark,
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "1",
       "spark.sql.shuffle.partitions" -> "1") {
       assert(run() === baseline,
@@ -123,16 +114,23 @@ class SpillResilienceSpec extends SparkSpec {
 
   test("q_dedup_components is partition-count independent (single-partition shuffle)") {
     // the heaviest iterative shuffle in the registry squeezed through ONE
-    // shuffle partition: every join/groupBy round funnels the whole graph
-    // through a single task — completion + identical output shows the
+    // shuffle partition — completion + identical output shows the
     // algorithm carries no per-partition assumptions (the property that
-    // lets the same code run at 32 or 20k partitions)
+    // lets the same code run at 32 or 20k partitions). withMaxRows(0)
+    // forces the distributed label-propagation loop: at the default bound
+    // the sf0.01 pair graph (25 pairs) closes by driver union-find and no
+    // round shuffles at all. The rounds themselves run at
+    // DriverLoop.roundPartitions, which is 1 at this size either way, so
+    // the session count varied here reaches the pair generation and the
+    // edge materialization before the loop
     def run() = SparkEntry.queries("q_dedup_components")(spark, Dir)
       .collect().toSeq
-    val baseline = run()
-    withConfs("spark.sql.shuffle.partitions" -> "1") {
-      assert(run() === baseline,
-        "single-partition run must reproduce the baseline components")
+    operators.DriverLoop.withMaxRows(0L) {
+      val baseline = run()
+      Sessions.withConfs(spark, "spark.sql.shuffle.partitions" -> "1") {
+        assert(run() === baseline,
+          "single-partition run must reproduce the baseline components")
+      }
     }
   }
 }

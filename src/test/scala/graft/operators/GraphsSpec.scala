@@ -52,16 +52,19 @@ class GraphsSpec extends SparkSpec {
   }
 
   test("deterministic across partitionings: 1 vs 32 shuffle partitions") {
+    // withMaxRows(0) forces the distributed loop (a 200-edge graph takes
+    // the driver path by default, where no shuffle runs). Its rounds run
+    // at DriverLoop.roundPartitions, which is 1 at this size, so the
+    // session count varied here reaches the edge summing, shares and
+    // vertex set built before the loop
     val edges = (0L until 200L).map(i => (i, (i * 7 + 3) % 200L, 1L + i % 5))
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    val one = try {
-      spark.conf.set("spark.sql.shuffle.partitions", "1")
-      ranks(edges, iters = 5)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
-    val many = try {
-      spark.conf.set("spark.sql.shuffle.partitions", "32")
-      ranks(edges, iters = 5)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    def at(parts: String) = DriverLoop.withMaxRows(0L) {
+      graft.Sessions.withConfs(spark, "spark.sql.shuffle.partitions" -> parts) {
+        ranks(edges, iters = 5)
+      }
+    }
+    val one = at("1")
+    val many = at("32")
     assert(one === many, "fixed-point ranks must be partitioning-independent")
   }
 
@@ -222,12 +225,15 @@ class GraphsSpec extends SparkSpec {
       yield (a, b, (a * 7 + b) % 5 + 1)).toDF("src", "dst", "w")
     def run() = Graphs.labelPropagation(edges, "src", "dst", "w", rounds = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val base = run()
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "1")
-      assert(run() === base, "LPA must not depend on partition count")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    // withMaxRows(0) forces the distributed rounds (this graph takes the
+    // driver path by default); LPA's rounds keep the session count, so
+    // the varied count reaches every round shuffle
+    DriverLoop.withMaxRows(0L) {
+      val base = run()
+      graft.Sessions.withConfs(spark, "spark.sql.shuffle.partitions" -> "1") {
+        assert(run() === base, "LPA must not depend on partition count")
+      }
+    }
   }
 
   test("modularity closure: identity on the query's own accounting, and positive on real cliques") {

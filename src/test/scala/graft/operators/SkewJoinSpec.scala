@@ -13,15 +13,12 @@ class SkewJoinSpec extends SparkSpec {
     import spark.implicits._
     // tighten the skew thresholds for test-sized data (runtime-settable),
     // restore afterwards — the session is shared across suites
-    val keys = Seq(
+    graft.Sessions.withConfs(spark,
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB",
       // keep AQE from coalescing everything into one partition first
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       // one hot key (0) carrying ~97% of the fact side + padding to get
       // over the byte threshold; dim side big enough to not broadcast
       // pad = md5(id): incompressible AND kept through the join (the
@@ -48,9 +45,6 @@ class SkewJoinSpec extends SparkSpec {
       assert(p.contains("isFinalPlan=true"))
       assert(p.contains("skew=true"),
         s"AQE did not mark the skewed join — thresholds or data shape off:\n$p")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -40,15 +40,13 @@ class SkewSpec extends SparkSpec {
       "lineitem_b", "o_orderkey", 4)
     // at this toy size the planner prefers broadcast (correctly); disable
     // it to expose the bucket co-location a 100 TB fact-fact join relies on
-    val thresholdBefore = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    graft.Sessions.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("orders_b")
         .join(spark.table("lineitem_b"), "o_orderkey")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), s"expected co-located join, got:\n$plan")
       assert(plan.contains("SortMergeJoin"))
       assert(joined.count() === li.count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresholdBefore)
+    }
   }
 }

@@ -810,41 +810,35 @@ class SourcesStreamingSpec extends SparkSpec {
     // flag (set here AND re-set inside readEvents below) is restored at
     // the end of the test so it can't leak into later suites that read
     // parquet on the shared session.
-    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-    val nanosPrev = spark.conf.getOption(nanosKey)
-    spark.conf.set(nanosKey, "true")
-    try {
-    val batchRaw = spark.read.parquet(srcDir)
-    val batchEv = batchRaw.schema("ts").dataType match {
-      case LongType         => batchRaw.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
-      case TimestampNTZType => batchRaw.withColumn("ts", col("ts").cast(TimestampType))
-      case _                => batchRaw
-    }
-    val oracle = collectMatches(PatternMatch.matches(batchEv))
-    assert(oracle.nonEmpty, "corpus must contain at least one full funnel")
-    // 1) reordered path over out-of-order micro-batches = batch oracle
-    val ev = EventsStream.readEvents(spark, srcDir, maxFilesPerTrigger = 1)
-    val m = PatternMatch.matchesReordered(ev, s"$delaySec seconds")
-    val reordered = EventsStream.runAvailableNow(spark, m.toDF(),
-        "cep_ooo_reordered", s"$tmp/ckpt_cep_ooo_reordered")
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        r.getLong(r.fieldIndex("latency_sec")))).toSet
-    assert(reordered === oracle,
-      "reorder-buffer matching under out-of-order batches must equal the batch oracle")
-    // 2) strict path must FAIL LOUDLY on the same source, not drift
-    val strict = PatternMatch.matches(
-      EventsStream.readEvents(spark, srcDir, maxFilesPerTrigger = 1))
-    val thrown = intercept[Exception] {
-      EventsStream.runAvailableNow(spark, strict.toDF(),
-        "cep_ooo_strict", s"$tmp/ckpt_cep_ooo_strict")
-    }
-    val causes = Iterator.iterate[Throwable](thrown)(_.getCause).takeWhile(_ != null)
-    assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
-        c.getMessage != null && c.getMessage.contains("in-order precondition")),
-      s"strict DFA must throw the in-order guard, got: $thrown")
-    } finally nanosPrev match {
-      case Some(v) => spark.conf.set(nanosKey, v)
-      case None    => spark.conf.unset(nanosKey)
+    graft.Sessions.withConfs(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+      val batchRaw = spark.read.parquet(srcDir)
+      val batchEv = batchRaw.schema("ts").dataType match {
+        case LongType         => batchRaw.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
+        case TimestampNTZType => batchRaw.withColumn("ts", col("ts").cast(TimestampType))
+        case _                => batchRaw
+      }
+      val oracle = collectMatches(PatternMatch.matches(batchEv))
+      assert(oracle.nonEmpty, "corpus must contain at least one full funnel")
+      // 1) reordered path over out-of-order micro-batches = batch oracle
+      val ev = EventsStream.readEvents(spark, srcDir, maxFilesPerTrigger = 1)
+      val m = PatternMatch.matchesReordered(ev, s"$delaySec seconds")
+      val reordered = EventsStream.runAvailableNow(spark, m.toDF(),
+          "cep_ooo_reordered", s"$tmp/ckpt_cep_ooo_reordered")
+        .collect().map(r => (r.getLong(0), r.getLong(1),
+          r.getLong(r.fieldIndex("latency_sec")))).toSet
+      assert(reordered === oracle,
+        "reorder-buffer matching under out-of-order batches must equal the batch oracle")
+      // 2) strict path must FAIL LOUDLY on the same source, not drift
+      val strict = PatternMatch.matches(
+        EventsStream.readEvents(spark, srcDir, maxFilesPerTrigger = 1))
+      val thrown = intercept[Exception] {
+        EventsStream.runAvailableNow(spark, strict.toDF(),
+          "cep_ooo_strict", s"$tmp/ckpt_cep_ooo_strict")
+      }
+      val causes = Iterator.iterate[Throwable](thrown)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+          c.getMessage != null && c.getMessage.contains("in-order precondition")),
+        s"strict DFA must throw the in-order guard, got: $thrown")
     }
   }
 }
