@@ -1,5 +1,7 @@
 package graft.analytics
 
+import java.util.Locale
+
 import graft.functions.Cleaning
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -19,11 +21,18 @@ object ListingQueries {
 
   /** Optional dashboard filters (views.py:40-50): case-insensitive
     * equality on state / search_keyword. */
-  final case class Filters(state: Option[String] = None, keyword: Option[String] = None)
+  final case class Filters(state: Option[String] = None, keyword: Option[String] = None) {
+    /** The one lower-casing of filter values, in `Locale.ROOT` as Spark's
+      * `lower` does on ASCII: under a `tr-TR` default locale "BIHAR"
+      * would otherwise become "bıhar" and match nothing. */
+    def normalized: Filters =
+      Filters(state.map(_.toLowerCase(Locale.ROOT)), keyword.map(_.toLowerCase(Locale.ROOT)))
+  }
 
   def applyFilters(df: DataFrame, f: Filters): DataFrame = {
-    val s1 = f.state.fold(df)(v => df.filter(lower(col("state")) === v.toLowerCase))
-    f.keyword.fold(s1)(v => s1.filter(lower(col("search_keyword")) === v.toLowerCase))
+    val n = f.normalized
+    val s1 = n.state.fold(df)(v => df.filter(lower(col("state")) === v))
+    n.keyword.fold(s1)(v => s1.filter(lower(col("search_keyword")) === v))
   }
 
   /** /api/summary/ (views.py:135-157): A1-A4 KPI block. */
@@ -111,9 +120,11 @@ object ListingQueries {
   def miniRows(df: DataFrame, n: Int, orderCol: Option[String] = None): DataFrame = {
     val cols = Seq("product_name", "supplier_name", "city", "price_numeric")
       .filter(df.columns.contains).map(col)
-    val capped = math.max(1, math.min(50, n))
-    orderCol.fold(df)(oc => df.orderBy(col(oc))).select(cols: _*).limit(capped)
+    orderCol.fold(df)(oc => df.orderBy(col(oc))).select(cols: _*).limit(miniRowsCount(n))
   }
+
+  /** The row count [[miniRows]] returns for a requested `n`: 1 to 50. */
+  def miniRowsCount(n: Int): Int = math.max(1, math.min(50, n))
 
   /** Chart 2 (analysis.py:256-257): A7 group-by mean, top-10 by avg. */
   def avgPriceByKeyword(df: DataFrame, n: Int = 10): DataFrame =
