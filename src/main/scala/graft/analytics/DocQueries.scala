@@ -778,8 +778,9 @@ object DocQueries {
   /** Dedup CLUSTER assembly: connected components over the exact-Jaccard
     * pair graph — (id, component) with component = min reachable id, the
     * canonical survivor. The whole chain (shingle → df-cap → pair →
-    * closure) is SQL-expressible, so DuckDB validates the iterative
-    * min-label propagation against a recursive CTE. */
+    * closure) is SQL-expressible, so DuckDB validates the closure
+    * (driver union-find, or star contraction above the gate) against a
+    * recursive CTE. */
   val qDedupComponents = GraftQuery(
     "q_dedup_components",
     (s, dir) => {

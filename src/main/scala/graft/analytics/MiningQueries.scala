@@ -2161,20 +2161,20 @@ object MiningQueries {
       FROM g, m ORDER BY lab""")
   )
 
-  /** Near-dup cluster census via the O(log n)-round star-contraction
-    * connected components ([[Graphs.bigStarComponents]], Kiveris et al.
-    * 2014) over the same df-capped 3-gram Jaccard pair graph as
-    * q_dedup_components — the fully-distributed alternative to that
-    * query's driver-union-find fast path, and the one that survives a
-    * pair graph too large for any single machine. Output is the
-    * per-component rollup (component = min doc_id, member count), i.e.
-    * the dup-cluster size census a dedup job reports at 100 TB.
+  /** Near-dup cluster census over the same df-capped 3-gram Jaccard
+    * pair graph as q_dedup_components, closed by
+    * [[graft.operators.Dedup.connectedComponents]]: driver union-find
+    * under [[graft.operators.DriverLoop.maxRows]] edges, O(log n)-round
+    * star contraction (Kiveris et al. 2014) above it — the path that
+    * survives a pair graph too large for any single machine. Output is
+    * the per-component rollup (component = min doc_id, member count),
+    * i.e. the dup-cluster size census a dedup job reports at 100 TB.
     *
     * Scale: the pair graph is the post-blocking artifact (df-capped, so
     * no hot-shingle pair explosion); each star round is two
     * rollup+join-back shapes keyed on a vertex with per-round
-    * localCheckpoint; rounds are O(log n) even on chain-shaped dup
-    * clusters where plain label propagation pays O(diameter). */
+    * checkpoints; rounds are O(log n) even on chain-shaped dup clusters
+    * where plain label propagation pays O(diameter). */
   val qCcBigstar = GraftQuery(
     "q_cc_bigstar",
     (s, dir) => {
@@ -2182,7 +2182,7 @@ object MiningQueries {
       val pairs = graft.operators.Dedup.ngramJaccardPairs(
         Tables.documents(s, dir), "doc_id", "text",
         k = 3, minJaccard = 0.5, maxDf = 100)
-      Graphs.bigStarComponents(pairs)
+      graft.operators.Dedup.connectedComponents(pairs)
         .groupBy($"label".as("component"))
         .agg(count(lit(1)).as("n_members"))
         .orderBy($"component")

@@ -1,9 +1,9 @@
 package graft.operators
 
 import graft.functions.TextAnalysis
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType, LongType, ShortType}
 
 /** Deduplication operator family for training-data pipelines: exact
   * (hash-groupBy), MinHash+LSH, SimHash, n-gram Jaccard.
@@ -51,13 +51,6 @@ object Dedup {
     df.select(col(idCol), TextAnalysis.fingerprint(col(textCol)).as("fingerprint"))
       .groupBy(col("fingerprint"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_docs"))
-
-  /** Survivors of exact dedup (the keep side of [[exactGroups]]). */
-  def exactDedup(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(TextAnalysis.fingerprint(col(textCol))).orderBy(col(idCol))
-    df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
-  }
 
   /** MinHash signatures as a DataFrame (id, sig):
     *  1. shingle hashes materialize ONCE per doc (native ShingleHashes64
@@ -108,17 +101,6 @@ object Dedup {
           col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-  }
-
-  /** Compatibility wrapper: signatures + banded candidates. */
-  def minhashLshCandidates(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      maxBucket: Int = DefaultMaxDf, portable: Boolean = false): DataFrame = {
-    require(bands > 0 && numHashes % bands == 0,
-      s"bands=$bands must divide numHashes=$numHashes (trailing slots would be silently ignored)")
-    lshCandidates(minhashSignatures(df, idCol, textCol, k, numHashes, portable), bands,
-      numHashes / bands, maxBucket, portable)
   }
 
   /** MinHash-estimated Jaccard for candidate pairs (fraction of agreeing
@@ -304,73 +286,51 @@ object Dedup {
   }
 
   /** Connected components over a near-dup pair list: assembles the pairs
-    * any of the generators above emit into DEDUP CLUSTERS — (id,
-    * component) where component = the minimum id reachable through the
-    * pair graph. The min-id member is the canonical survivor; everything
-    * else in the component is a duplicate to drop.
+    * any of the generators above emit into DEDUP CLUSTERS — (id, label)
+    * where label = the minimum id reachable through the pair graph. The
+    * min-id member is the canonical survivor; everything else in the
+    * component is a duplicate to drop. Only ids appearing in `pairs` are
+    * labeled (singletons are their own component trivially), and ids
+    * surface as LongType whichever path runs.
     *
-    * Min-label propagation: each round every vertex takes the min of its
-    * own and its neighbors' labels — one join + one partial-aggregated
-    * groupBy on the (tiny relative to the corpus) pair graph, converging
-    * in graph-diameter rounds. Near-dup graphs are quasi-cliques, so the
-    * convergence count typically stops the loop after 2-3 rounds;
-    * `maxIter` bounds adversarial chains — hitting it THROWS, because
-    * unconverged labels split real clusters. (Pointer-jumping would give
-    * O(log d) rounds but requires a self-join of the checkpointed round
-    * result, which trips Spark's relation dedup on LogicalRDD constraint
-    * rewrite — not worth it at these diameters.) Only ids appearing in
-    * `pairs` are labeled (singletons are their own component trivially).
+    * One materialization of the edge set feeds the gate count and the
+    * path it selects:
+    *  - at most [[DriverLoop.maxRows]] UNDIRECTED edges close on the
+    *    DRIVER via union-find ([[driverComponents]]: O(E α(E)), no
+    *    rounds, ~16 B of driver heap per edge plus one output Row per
+    *    vertex — the result relation itself);
+    *  - above the gate, star contraction ([[starComponents]]) closes the
+    *    graph in O(log n) distributed rounds whatever its diameter.
+    *    Near-dup graphs are quasi-cliques, but dbscan's core skeletons
+    *    are chains whose diameter grows with cluster extent, and a
+    *    per-hop label loop cannot bound those.
+    * Specs pin both paths to identical output under a bound of 0.
     *
-    * Graphs of at most [[DriverLoop.maxRows]] UNDIRECTED edges close on
-    * the DRIVER via union-find instead (identical labels, O(E α(E)), no
-    * rounds; ~16 B of driver heap per edge plus one output Row per
-    * vertex — the result relation itself) — see [[driverComponents]];
-    * the distributed loop is the above-bound path.
-    *
-    * The loop path's rounds run at [[DriverLoop.roundPartitions]]
-    * under [[graft.Sessions.withConfs]] and checkpoint through
-    * [[DriverLoop.RoundCheckpoints]] — see both for their single-writer
-    * caveats. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 10,
+    * `checkpointDir = Some(dir)` makes every materialization a DURABLE
+    * checkpoint under `dir` that survives executor loss (see
+    * [[DriverLoop.RoundCheckpoints]] for its single-writer caveat);
+    * superseded generations are deleted as the rounds advance, so only
+    * the returned relation's generation stays on disk. `maxIter` bounds
+    * the star rounds — hitting it THROWS, because unconverged labels
+    * split real clusters. */
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 40,
       checkpointDir: Option[String] = None): DataFrame = {
     require(maxIter > 0, s"maxIter=$maxIter must be positive")
-    // `checkpointDir = Some(dir)` switches the loop's lineage truncation
-    // from executor-memory localCheckpoint to DURABLE checkpoint() on
-    // cluster storage: a long multi-round job on a real cluster survives
-    // executor loss (localCheckpoint blocks die with their executor and
-    // the truncated plan cannot recompute them). Identical labels either
-    // way — only the storage of the per-round materialization moves.
-    //
-    // STORAGE HYGIENE: a superseded generation is DELETED as soon as
-    // the next one is materialized — Spark never cleans reliable
-    // checkpoints itself (spark.cleaner...cleanCheckpoints defaults to
-    // false), so a d-round graph would otherwise leave d+2 copies of
-    // graph-sized state on cluster storage, unbounded across
-    // invocations. Only the returned relation's own checkpoint (and,
-    // while the loop runs, the edge set) stays on disk.
-    val spark = pairs.sparkSession
-    val ckpt = new DriverLoop.RoundCheckpoints(spark, checkpointDir)
-    // ids normalize to LongType UP FRONT so both closure paths (driver
-    // union-find and distributed loop) return the identical (id long,
-    // label long) schema — without this the output type would depend on
-    // which path the GRAPH SIZE selected. Non-integral id columns are
-    // rejected loudly: a string→long cast yields nulls, which would
-    // silently corrupt labels instead of failing.
+    // non-integral id columns are rejected loudly: a string→long cast
+    // yields nulls, which would silently corrupt labels instead of failing
     Seq("id_a", "id_b").foreach { c =>
       val t = pairs.schema(c).dataType
-      require(Seq[org.apache.spark.sql.types.DataType](
-          org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
-          org.apache.spark.sql.types.IntegerType, LongType).contains(t),
+      require(Seq[DataType](ByteType, ShortType, IntegerType, LongType).contains(t),
         s"connectedComponents: pair column $c must be an integral id type, got $t")
     }
-    // LINEAGE TRUNCATION is the load-bearing detail of the loop: a cached
-    // DataFrame still carries its full logical plan, and each round
-    // references the previous round TWICE (jump join) — without
-    // truncation the plan tree doubles per round and the driver spends
-    // seconds re-optimizing it (measured: round 1 cost 11 s on a
-    // 256-pair graph). Eager localCheckpoint() pins the rows and cuts
-    // the plan to the materialized RDD; a durable `checkpoint()` to
-    // cluster storage is the fault-tolerant variant for long jobs.
+    val spark = pairs.sparkSession
+    val ckpt = new DriverLoop.RoundCheckpoints(spark, checkpointDir)
+    // a null id fails in the edge projection itself, on both paths and
+    // without a job of its own (star contraction's least/greatest would
+    // skip it and label it null)
+    def id(c: String): Column = when(col(c).isNull, raise_error(lit(
+        "connectedComponents: null id in pair list — drop null-id rows upstream")))
+      .otherwise(col(c).cast(LongType))
     // both directions emit from ONE pass over the pair relation (explode,
     // not a self-union): the incoming pairs are typically an expensive
     // blocked pair generator, and a union would execute that pipeline
@@ -378,104 +338,135 @@ object Dedup {
     // generator's internal caches, not its joins, are shared) — measured
     // r16 on q_dedup_components: the second execution was ~40% of the
     // query
-    val edges = pairs
-      .select(col("id_a").cast(LongType).as("a"), col("id_b").cast(LongType).as("b"))
+    val edges = ckpt(pairs.select(id("id_a").as("a"), id("id_b").as("b"))
       .select(explode(array(
         struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
-    val edgesCk = ckpt(edges)
-    val nEdges = edgesCk.count() // free — edges is already materialized
-    // SMALL-GRAPH FAST PATH: the pair graph is a post-blocking artifact,
-    // orders of magnitude smaller than the corpus (a df-capped near-dup
-    // pair list, not the documents). Up to DriverLoop.maxRows UNDIRECTED
-    // edges (~32 MB of primitive longs at the 2e6 bound — one direction
-    // streamed into two long arrays, boxing bounded to one partition at a
-    // time) a driver-side union-find closes it in one pass + O(E α(E)) —
-    // versus ~diameter distributed rounds each paying multi-stage job
-    // overhead. Same bounded-driver-state pattern as IvfIndex's sampled
-    // Lloyd; the distributed loop below remains the path for graphs that
-    // outgrow the bound (specs pin both paths to identical output under
-    // a bound of 0).
-    // ceil: self-loops appear once in the directed relation, and floor
-    // division would route a 1-edge graph down the driver path even
-    // under a bound of 0
-    if ((nEdges + 1) / 2 <= DriverLoop.maxRows) {
+      .distinct(), eager = false)
+    // the gate count is the action that materializes the lazy edge
+    // checkpoint: one job for both. Self-loops count once.
+    val nEdges = edges.filter(col("src") <= col("dst")).count()
+    if (nEdges <= DriverLoop.maxRows) {
       // driverComponents materializes into driver arrays and returns a
       // local-rows relation — the edge checkpoint is dead once it returns
-      val out = driverComponents(spark, edgesCk)
+      val out = driverComponents(spark, edges)
       ckpt.delete(0)
-      return out
+      out
+    } else starComponents(spark, edges, nEdges, maxIter, ckpt)
+  }
+
+  /** Connected components via ALTERNATING STAR CONTRACTIONS (the
+    * "large-star / small-star" algorithm of Kiveris, Lattanzi, Mirrokni,
+    * Rastogi & Vassilvitskii 2014, "Connected Components in MapReduce
+    * and Beyond"): O(log n) rounds where plain min-label propagation pays
+    * one round per hop of diameter — the star alternation halves the
+    * tree height every round. `edges` is [[connectedComponents]]' directed
+    * edge set, `nEdges` its undirected count.
+    *
+    * One round over the canonical (u < v) edge relation =
+    *  - LARGE-STAR: every node x re-attaches each strictly-LARGER
+    *    neighbor y to m(x) = min(Γ(x) ∪ {x}) — per-node rollup + one
+    *    equi-join back, both keyed on x; emitted edges (m, y) keep
+    *    m < y so no self-loops arise;
+    *  - SMALL-STAR: every node x re-attaches its strictly-smaller
+    *    neighbors (and itself) to their minimum — one rollup keyed on v
+    *    + one equi-join back.
+    * Both halves are rollup+join shapes — never a pair expansion — and
+    * each materializes through `ckpt` (a round referenced lazily by the
+    * next re-executes geometrically otherwise); small-star's local
+    * checkpoint is LAZY, forced by the convergence checksum, so
+    * materialization and convergence test share one job.
+    *
+    * Fixpoint detection without comparing edge sets row-by-row: the
+    * canonical edge relation's (count, SUM of per-edge xxhash64 as
+    * DECIMAL(38,0)) checksum — star contraction is a deterministic map
+    * of the finite edge set, so an unchanged checksum across one full
+    * round means the set itself is stable (modulo a vanishing 128-bit
+    * collision chance, acceptable for a termination test — NOT for
+    * labels, which are read off the materialized star forest itself).
+    * 2·log2(n) rounds is the paper's bound.
+    *
+    * Scale: the edge relation only ever shrinks (star contraction never
+    * adds edges beyond the re-attachments it removes); every shuffle is
+    * keyed on a vertex; the driver sees one 2-column checksum row per
+    * round and never a vertex. Rounds run at
+    * [[DriverLoop.roundPartitions]], set through
+    * [[graft.Sessions.withConfs]]. */
+  private def starComponents(spark: SparkSession, edges: DataFrame, nEdges: Long,
+      maxIter: Int, ckpt: DriverLoop.RoundCheckpoints): DataFrame = {
+    def checksum(df: DataFrame): (Long, java.math.BigDecimal) = {
+      val r = df.agg(count(lit(1)),
+        sum(xxhash64(col("u"), col("v")).cast(DecimalType(38, 0)))).head()
+      (r.getLong(0), Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
     }
-    var labels = ckpt(edgesCk.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")))
-    var labelsGen = ckpt.generations - 1 // the generation holding `labels`
-    // convergence detection without a per-round join: the id set is fixed
-    // (the union keeps every labeled id in play) and labels only ever
-    // DECREASE under min-propagation, so "any label moved" ⇔ "the exact
-    // decimal sum of all labels strictly dropped". One tiny aggregate on
-    // the just-checkpointed relation replaces a join+filter+count job per
-    // round. Decimal(38,0), not long: at corpus scale, billions of ids ×
-    // 10^12 magnitudes overflow an int64 sum.
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val row = df.agg(count(lit(1)),
-        sum(col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head()
-      val d = row.getDecimal(1)
-      // a null SUM means EITHER an empty graph OR a Decimal(38,0)
-      // overflow (sum semantics return null on overflow here) — only the
-      // former may read as ZERO: two consecutive overflowed rounds would
-      // compare equal and report convergence with wrong labels
-      if (d == null) {
-        if (row.getLong(0) == 0L) java.math.BigDecimal.ZERO
-        else throw new ArithmeticException(
-          "connectedComponents: label sum overflowed Decimal(38,0) — " +
-            "id magnitudes are too large for sum-based convergence detection")
-      } else d
-    }
-    var prevSum = labelSum(labels)
-    var changed = true
-    var i = 0
-    // maxIter bounds LABEL-MOVING rounds; one extra round runs to CONFIRM
-    // convergence (a graph of diameter exactly maxIter converges on its
-    // final permitted round, which is only observable one round later)
+    // canonical undirected edges (u < v), self-loops dropped: a filter
+    // over the materialized edge set (generation 0, deleted last)
+    var e = edges.filter(col("src") < col("dst"))
+      .select(col("src").as("u"), col("dst").as("v"))
+    var eGen = 0 // the durable generation backing `e`
+    var prev = checksum(e)
+    var converged = false
+    var round = 0
     graft.Sessions.withConfs(spark,
         "spark.sql.shuffle.partitions" -> DriverLoop.roundPartitions(spark, nEdges).toString) {
-      while (changed && i < maxIter + 1) {
-        val next = ckpt(edgesCk.join(labels, edgesCk("src") === labels("id"))
-          .select(col("dst").as("id"), col("label"))
-          .union(labels)
-          .groupBy(col("id")).agg(min(col("label")).as("label")))
-        val nextSum = labelSum(next)
-        changed = nextSum.compareTo(prevSum) != 0
-        prevSum = nextSum
-        labels = next
-        // `next` is materialized (checkpoint is eager) — the previous
-        // round's generation is now unreferenced; reclaim it
-        ckpt.delete(labelsGen)
-        labelsGen = ckpt.generations - 1
-        i += 1
+      // Round shape note (r16): an "attach to the per-key minimum" could
+      // also be ONE window min over the key instead of rollup + equi-join
+      // back — measured on the sf0.1 pair graph the two are
+      // indistinguishable, and the rollup+join form keeps partial
+      // (map-side) aggregation AND stays AQE-skew-splittable where a
+      // window partition cannot be split (guide §2.5) — late rounds
+      // concentrate a whole component's edges on its root vertex, which
+      // is exactly the partition a skew split has to save.
+      while (!converged && round < maxIter) {
+        // LARGE-STAR over the directed neighbor view
+        val nbr = e.select(col("u").as("x"), col("v").as("y"))
+          .union(e.select(col("v").as("x"), col("u").as("y")))
+        val mL = nbr.groupBy(col("x"))
+          .agg(least(min(col("y")), first(col("x"))).as("m"))
+        val ls = ckpt(nbr.join(mL, "x").filter(col("y") > col("x"))
+          .select(col("m").as("u"), col("y").as("v"))
+          .distinct())
+        val lsGen = ckpt.generations - 1
+        // SMALL-STAR on the canonical relation: group the smaller
+        // endpoints (and the node itself) under each v, attach to their min
+        val mS = ls.groupBy(col("v")).agg(min(col("u")).as("m"))
+        val ss = ckpt(ls.join(mS, "v")
+          .select(col("m").as("nu"), col("u").as("nv"))
+          .union(mS.select(col("m").as("nu"), col("v").as("nv")))
+          .filter(col("nu") =!= col("nv"))
+          .select(least(col("nu"), col("nv")).as("u"),
+            greatest(col("nu"), col("nv")).as("v"))
+          .distinct(), eager = false)
+        val cur = checksum(ss)
+        // `ss` is materialized: the previous round's edges and this
+        // round's large-star are unreferenced; reclaim them
+        if (eGen > 0) ckpt.delete(eGen)
+        ckpt.delete(lsGen)
+        e = ss
+        eGen = ckpt.generations - 1
+        converged = cur == prev
+        prev = cur
+        round += 1
       }
     }
-    // unconverged labels are WRONG labels (one cluster reported as
-    // several) — a dedup pipeline must fail loudly, not keep duplicates
-    if (changed) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds " +
-        "— the pair graph has chains longer than maxIter; raise maxIter")
-    // the loop is done: the edge set's generation is dead too. Only the
-    // final labels' generation remains on disk — it backs the returned
-    // relation until the caller consumes it.
-    ckpt.delete(0)
-    labels
+    if (!converged) throw new IllegalStateException(
+      s"connectedComponents did not converge in $maxIter star-contraction rounds " +
+        "— raise maxIter (paper bound is ~2*log2(n) rounds)")
+    // at the fixpoint e is a star forest rooted at each component's
+    // minimum: every vertex takes the min of its own id and its root;
+    // ids seen only in self-pairs never enter e and keep their own
+    ckpt.finish(e.select(col("v").as("id"), col("u").as("label"))
+      .union(edges.select(col("src").as("id"), col("src").as("label")))
+      .groupBy(col("id")).agg(min(col("label")).as("label")))
   }
 
   /** Driver-side closure of a small pair graph: union-find with path
     * compression, unioning the larger root UNDER the smaller — so every
-    * root is its component's minimum id by construction, matching the
-    * distributed loop's min-label semantics exactly. Ids surface as
+    * root is its component's minimum id by construction, matching star
+    * contraction's labels exactly. Ids surface as
     * LongType (every caller keys by a long doc id). */
-  private def driverComponents(
-      spark: org.apache.spark.sql.SparkSession, edges: DataFrame): DataFrame = {
+  private def driverComponents(spark: SparkSession, edges: DataFrame): DataFrame = {
     // one direction suffices for union-find (half the transfer); keep
     // src == dst self-loops so their vertex still surfaces. The stream
     // lands in primitive long arrays — toLocalIterator bounds the boxed
@@ -488,8 +479,6 @@ object Dedup {
       .toLocalIterator()
     while (it.hasNext) {
       val r = it.next()
-      if (r.isNullAt(0) || r.isNullAt(1)) throw new IllegalArgumentException(
-        "connectedComponents: null id in pair list — drop null-id rows upstream")
       sb += r.getLong(0); db += r.getLong(1)
     }
     val srcA = sb.result(); val dstA = db.result()

@@ -48,15 +48,12 @@ object Density {
     * the core skeleton, -1 for noise. minPts counts the point ITSELF
     * (the classic definition: |N_eps(p)| ≥ minPts with p ∈ N_eps(p)).
     *
-    * Closure routing: core skeletons are FILAMENTS — density-connected
-    * chains whose graph diameter grows with cluster extent / eps, the
-    * OPPOSITE regime from the quasi-clique near-dup graphs
-    * [[Dedup.connectedComponents]]'s diameter-bounded loop was built
-    * for (measured: the sf1 customer plane's skeleton blew straight
-    * past that loop's 10 rounds). Under [[DriverLoop.maxRows]] the driver
-    * union-find closes it in one pass; above it the closure goes to
-    * [[Graphs.bigStarComponents]] — O(log n) rounds regardless of
-    * diameter, the correct asymptotics for chain-shaped components. */
+    * Closure: core skeletons are FILAMENTS — density-connected chains
+    * whose graph diameter grows with cluster extent / eps (measured: the
+    * sf1 customer plane's skeleton blew past a 10-round min-label loop).
+    * [[Dedup.connectedComponents]] closes them by driver union-find
+    * under [[DriverLoop.maxRows]] and by star contraction above it —
+    * O(log n) rounds regardless of diameter. */
   def dbscan(pts: DataFrame, eps: Long, minPts: Int): DataFrame = {
     require(eps > 0, s"eps=$eps must be positive")
     require(minPts >= 2, s"minPts=$minPts must be at least 2 (1 makes everything core)")
@@ -133,7 +130,7 @@ object Density {
     // drops from Σ occupancy² to ~(cores + occupied cell pairs) ∝ N.
     val corePts = Caches.register(pf.join(cores, "id")
       .select($"id", $"xm", $"ym", $"cx", $"cy", $"gx", $"gy"))
-    val skeleton = (if (s2Valid) {
+    val skeleton = if (s2Valid) {
       val cellMin = Caches.register(corePts.groupBy($"gx", $"gy")
         .agg(min($"id").as("repr")))
       val starEdges = corePts.join(cellMin, Seq("gx", "gy"))
@@ -155,18 +152,8 @@ object Density {
     } else {
       ballJoin(corePts, corePts).filter($"a.id" < $"b.id")
         .select($"a.id".as("id_a"), $"b.id".as("id_b"))
-    }).localCheckpoint(false)
-    // materialized BY the routing count (lazy checkpoint — the count is
-    // the forcing action, one job instead of checkpoint + count) to
-    // route by size: driver union-find under the gate, star contraction
-    // beyond it — NOT the min-label loop: even contracted, a skeleton of
-    // cell-chains keeps diameter ∝ extent/eps, only O(log n) rounds are
-    // safe at scale. Under the gate Dedup's own gate (ceil of its
-    // distinct undirected edges, at most this count) routes to its
-    // union-find too.
-    val linked = (if (skeleton.count() <= DriverLoop.maxRows)
-        Dedup.connectedComponents(skeleton)
-      else Graphs.bigStarComponents(skeleton))
+    }
+    val linked = Dedup.connectedComponents(skeleton)
       .select($"id", $"label".as("cluster"))
     // isolated cores (≥ minPts border/noise neighbors, no core neighbor):
     // singleton clusters labeled by their own id

@@ -59,14 +59,30 @@ object DriverLoop {
       * is `generations - 1`. */
     def generations: Int = gen
 
-    /** Materializes `df` and returns the truncated relation. */
-    def apply(df: DataFrame): DataFrame = dir match {
-      case None => df.localCheckpoint()
+    /** Materializes `df` and returns the truncated relation. A lazy
+      * local checkpoint (`eager = false`) materializes in the first job
+      * over it, which saves a job when the loop needs that job anyway
+      * (a gate count, a convergence checksum). Durable generations are
+      * always written eagerly, so a superseded one can be deleted as
+      * soon as its successor is returned. */
+    def apply(df: DataFrame, eager: Boolean = true): DataFrame = dir match {
+      case None => df.localCheckpoint(eager)
       case Some(d) =>
         spark.sparkContext.setCheckpointDir(s"$d/gen-$gen")
         gen += 1
         df.checkpoint()
     }
+
+    /** Returns the loop's result `df`. Durable mode writes it as the one
+      * generation that survives and deletes every earlier one; local
+      * mode returns it as is, a plan over the loop's local checkpoints. */
+    def finish(df: DataFrame): DataFrame =
+      if (dir.isEmpty) df
+      else {
+        val out = apply(df)
+        (0 until gen - 1).foreach(delete)
+        out
+      }
 
     /** Deletes durable generation `g` (idempotent; a no-op in local mode). */
     def delete(g: Int): Unit = dir.foreach { d =>

@@ -415,7 +415,7 @@ object Graphs {
     * edge relation against the survivor set — all equi-shuffles on the
     * vertex key, edge-relation-sized, fully distributed. Rounds are
     * checkpointed (same lineage-truncation discipline as [[pagerank]] /
-    * Dedup.connectedComponents). Convergence = the survivor count stops
+    * Dedup.connectedComponents' star rounds). Convergence = the survivor count stops
     * falling (peeling is monotone decreasing, so equal counts mean a
     * fixpoint); `maxIter` bounds adversarial chains — hitting it THROWS,
     * because a partially-peeled graph is not a k-core. Peel-round count
@@ -704,150 +704,5 @@ object Graphs {
         .localCheckpoint()
     }
     dist
-  }
-
-  /** Connected components via ALTERNATING STAR CONTRACTIONS (the
-    * "large-star / small-star" algorithm of Kiveris, Lattanzi, Mirrokni,
-    * Rastogi & Vassilvitskii 2014, "Connected Components in MapReduce
-    * and Beyond"): converges in O(log n) rounds versus the O(diameter)
-    * of plain min-label propagation ([[Dedup.connectedComponents]]'
-    * distributed path) — on a path- or chain-shaped similarity graph
-    * (common in near-dup chains: A~B~C~... with no A~C edge) diameter is
-    * O(n) and label propagation pays a round per hop, while the star
-    * alternation halves the tree height every round.
-    *
-    * One round =
-    *  - LARGE-STAR: every node x re-attaches each strictly-LARGER
-    *    neighbor y to m(x) = min(Γ(x) ∪ {x}) — per-node rollup + one
-    *    equi-join back, both keyed on x; emitted edges (m, y) keep
-    *    m < y so no self-loops arise;
-    *  - SMALL-STAR: every node x re-attaches its strictly-smaller
-    *    neighbors (and itself) to their minimum — on the canonical
-    *    (u < v) edge relation this is one rollup keyed on v + one
-    *    equi-join back.
-    * Both halves are rollup+join shapes — never a pair expansion — and
-    * each round materializes through localCheckpoint (the house
-    * iterative-op rule: a round referenced lazily by the next round
-    * re-executes geometrically otherwise); the round-final checkpoint
-    * is LAZY, forced by the convergence checksum, so materialization
-    * and convergence test share one job.
-    *
-    * Fixpoint detection without comparing edge sets row-by-row: the
-    * canonical edge relation's (count, SUM of per-edge xxhash64 as
-    * DECIMAL(38,0)) checksum — star contraction is a deterministic map
-    * of the finite edge set, so an unchanged checksum across one full
-    * round means the set itself is stable (modulo a vanishing 128-bit
-    * collision chance, acceptable for a termination test — NOT for
-    * labels, which are read off the materialized star forest itself).
-    * Throws if `maxIter` rounds pass without convergence rather than
-    * returning wrong labels; 2·log2(n) rounds is the paper's bound.
-    *
-    * Returns (id, label) for every endpoint of `pairs`, label = the
-    * component's minimum id — identical to [[Dedup.connectedComponents]]
-    * (a spec pins the two equal on shared graphs).
-    *
-    * Scale: edge relation only ever shrinks (star contraction never
-    * adds edges beyond the re-attachments it removes); every shuffle is
-    * keyed on a vertex; the driver sees one 2-column checksum row per
-    * round and never a vertex. Rounds run at
-    * [[DriverLoop.roundPartitions]], set through
-    * [[graft.Sessions.withConfs]]. */
-  def bigStarComponents(pairs: DataFrame, maxIter: Int = 40): DataFrame = {
-    import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType}
-    Seq("id_a", "id_b").foreach { c =>
-      val t = pairs.schema(c).dataType
-      require(Seq[org.apache.spark.sql.types.DataType](
-          ByteType, ShortType, IntegerType, LongType).contains(t),
-        s"bigStarComponents: pair column $c must be an integral id type, got $t")
-    }
-    require(maxIter >= 1, s"maxIter=$maxIter must be >= 1")
-    // the incoming pair relation is typically the expensive artifact (a
-    // blocked near-dup pair generator over the corpus) and this operator
-    // reads it from THREE subtrees (the canonical edge list plus both
-    // branches of the endpoint union) — cache it once so the generator
-    // pipeline executes once, not three times (the r16 fix: measured 3×
-    // pair-generation re-execution on q_cc_bigstar)
-    val pr = Caches.register(pairs.select(
-      col("id_a").cast(LongType).as("a"), col("id_b").cast(LongType).as("b")))
-    // canonical undirected edge list (u < v), self-loops dropped up front.
-    // LAZY localCheckpoint throughout this operator: the checksum that
-    // every generation needs anyway is the action that materializes it,
-    // so each generation costs ONE job (checkpoint-during-checksum)
-    // instead of an eager-checkpoint job plus a checksum job.
-    var e = pr.select(
-        least(col("a"), col("b")).as("u"),
-        greatest(col("a"), col("b")).as("v"))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint(false)
-    // the full endpoint set, fixed for the whole run: components that
-    // contract away (none can, but singletons never enter e) and ids
-    // seen only in self-pairs still get a label row. One explode pass,
-    // not a self-union — each union branch would re-read pr (cached, so
-    // cheap here, but the single-subtree form also can't race the cache
-    // fill)
-    val verts = Caches.register(pr
-      .select(explode(array(col("a"), col("b"))).as("id")).distinct())
-    def checksum(df: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = df.agg(count(lit(1)),
-        sum(xxhash64(col("u"), col("v")).cast(DecimalType(38, 0)))).head()
-      (r.getLong(0), Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
-    }
-    var prev = checksum(e)
-    // size the round shuffles to the GRAPH, not the corpus
-    // (DriverLoop.roundPartitions): each of the O(log n) rounds pays
-    // per-partition task overhead on four keyed shuffles, and the
-    // post-blocking pair graph is orders of magnitude smaller than the
-    // corpus that produced it
-    val spark = pairs.sparkSession
-    var converged = false
-    var round = 0
-    graft.Sessions.withConfs(spark,
-        "spark.sql.shuffle.partitions" -> DriverLoop.roundPartitions(spark, prev._1).toString) {
-      // Round shape note (r16): an "attach to the per-key minimum" could
-      // also be ONE window min over the key instead of rollup + equi-join
-      // back — measured on the sf0.1 pair graph the two are
-      // indistinguishable, and the rollup+join form keeps partial
-      // (map-side) aggregation AND stays AQE-skew-splittable where a
-      // window partition cannot be split (guide §2.5) — late rounds
-      // concentrate a whole component's edges on its root vertex, which
-      // is exactly the partition a skew split has to save. So the rounds
-      // keep the join form; what r16 did change is the materialization:
-      // small-star's localCheckpoint is LAZY and the convergence checksum
-      // is the action that forces it, one job instead of two per round.
-      while (!converged && round < maxIter) {
-        // LARGE-STAR over the directed neighbor view
-        val nbr = e.select(col("u").as("x"), col("v").as("y"))
-          .union(e.select(col("v").as("x"), col("u").as("y")))
-        val mL = nbr.groupBy(col("x"))
-          .agg(least(min(col("y")), first(col("x"))).as("m"))
-        val ls = nbr.join(mL, "x").filter(col("y") > col("x"))
-          .select(col("m").as("u"), col("y").as("v"))
-          .distinct().localCheckpoint()
-        // SMALL-STAR on the canonical relation: group the smaller
-        // endpoints (and the node itself) under each v, attach to their min
-        val mS = ls.groupBy(col("v")).agg(min(col("u")).as("m"))
-        val ss = ls.join(mS, "v")
-          .select(col("m").as("nu"), col("u").as("nv"))
-          .union(mS.select(col("m").as("nu"), col("v").as("nv")))
-          .filter(col("nu") =!= col("nv"))
-          .select(least(col("nu"), col("nv")).as("u"),
-            greatest(col("nu"), col("nv")).as("v"))
-          .distinct().localCheckpoint(false)
-        e = ss
-        val cur = checksum(e)
-        converged = cur == prev
-        prev = cur
-        round += 1
-      }
-    }
-    if (!converged) throw new IllegalStateException(
-      s"bigStarComponents: no fixpoint after $maxIter rounds — " +
-        "raise maxIter (paper bound is ~2*log2(n) rounds)")
-    // at the fixpoint e is a star forest (root = component min): read
-    // labels off it, defaulting absent (isolated) vertices to themselves
-    val labels = e.select(col("v").as("id"), col("u").as("label"))
-      .union(e.select(col("u").as("id"), col("u").as("label")))
-      .groupBy(col("id")).agg(min(col("label")).as("label"))
-    verts.join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("label"), col("id")).as("label"))
   }
 }

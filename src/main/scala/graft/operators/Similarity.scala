@@ -352,8 +352,8 @@ object Similarity {
     * is a maximal subset in doc order with pairwise distance > ε among
     * DETECTED pairs, which over-prunes chains relative to keep-one-per-
     * connected-component. That is the standard SemDeDup trade: the
-    * anti-join closes in ONE pass, while component collapse needs the
-    * iterative [[Dedup.connectedComponents]] — compose that with
+    * anti-join closes in ONE pass, while component collapse needs a
+    * closure ([[Dedup.connectedComponents]]) — compose that with
     * [[embeddingDupPairs]] instead when chain-preserving semantics
     * matter more than a single-pass plan.
     *

@@ -117,7 +117,7 @@ class SpillResilienceSpec extends SparkSpec {
     // shuffle partition — completion + identical output shows the
     // algorithm carries no per-partition assumptions (the property that
     // lets the same code run at 32 or 20k partitions). withMaxRows(0)
-    // forces the distributed label-propagation loop: at the default bound
+    // forces the distributed star-contraction rounds: at the default bound
     // the sf0.01 pair graph (25 pairs) closes by driver union-find and no
     // round shuffles at all. The rounds themselves run at
     // DriverLoop.roundPartitions, which is 1 at this size either way, so

@@ -77,10 +77,7 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(recall >= 0.7, s"simhash recall $recall over ${exact.size} exact pairs")
   }
 
-  test("exact dedup is idempotent and keeps min ids") {
-    val once = Dedup.exactDedup(docs, "doc_id", "text")
-    val twice = Dedup.exactDedup(once, "doc_id", "text")
-    assert(once.count() === twice.count())
+  test("exact groups account for every doc exactly once") {
     val groups = Dedup.exactGroups(docs, "doc_id", "text")
     assert(groups.agg(sum("n_docs")).collect()(0).getLong(0) === docs.count())
   }

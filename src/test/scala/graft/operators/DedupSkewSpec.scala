@@ -77,12 +77,13 @@ class DedupSkewSpec extends SparkSpec {
   }
 
   test("minhash LSH: over-full band buckets capped, planted pairs survive") {
-    val uncapped = pairs(Dedup.minhashLshCandidates(corpus, "doc_id", "text",
-      k = 3, numHashes = 32, bands = 8, maxBucket = 0))
+    def lsh(maxBucket: Int) = pairs(Dedup.lshCandidates(
+      Dedup.minhashSignatures(corpus, "doc_id", "text", k = 3, numHashes = 32),
+      bands = 8, rowsPerBand = 4, maxBucket = maxBucket))
+    val uncapped = lsh(maxBucket = 0)
     assert(uncapped.size >= 50 * 49 / 2,
       s"identical docs must collide in every band: ${uncapped.size}")
-    val capped = pairs(Dedup.minhashLshCandidates(corpus, "doc_id", "text",
-      k = 3, numHashes = 32, bands = 8, maxBucket = 20))
+    val capped = lsh(maxBucket = 20)
     assert(!capped.exists(boilerPair), s"hot buckets survived: $capped")
     assert(capped.contains((200L, 201L)), s"planted exact-dup lost: $capped")
   }
@@ -98,14 +99,14 @@ class DedupSkewSpec extends SparkSpec {
     val comp = Dedup.connectedComponents(pairChain)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(comp === expected)
-    // a driver-loop bound of 0 forces the distributed min-label loop —
+    // a driver-loop bound of 0 forces the distributed star rounds —
     // both paths must produce identical labels
     val loop = DriverLoop.withMaxRows(0L) {
       Dedup.connectedComponents(pairChain)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     }
     assert(loop === expected)
-    // an under-provisioned maxIter fails LOUDLY on the loop path —
+    // an under-provisioned maxIter fails LOUDLY on the star path —
     // unconverged labels would split one real cluster into several,
     // silently keeping dups (the driver path needs no iteration bound)
     val e = intercept[IllegalStateException] {
@@ -165,8 +166,8 @@ class DedupSkewSpec extends SparkSpec {
       assert(durable === local)
       // the durable path wrote RDD checkpoints AND reclaimed every
       // superseded generation: only the final labels' generation may
-      // remain (edges + per-round label checkpoints are deleted as the
-      // loop advances — Spark itself never cleans reliable checkpoints)
+      // remain (edges + per-round star checkpoints are deleted as the
+      // rounds advance — Spark itself never cleans reliable checkpoints)
       def count(prefix: String): Long =
         java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
           .filter(p => p.getFileName.toString.startsWith(prefix)).count()
@@ -207,6 +208,18 @@ class DedupSkewSpec extends SparkSpec {
       Dedup.connectedComponents(bad)
     }
     assert(e.getMessage.contains("integral id type"))
+  }
+
+  test("connected components: a null id fails on both paths") {
+    import spark.implicits._
+    val withNull = Seq((Some(1L), Some(2L)), (None, Some(2L)), (Some(3L), Some(4L)))
+      .toDF("id_a", "id_b")
+    for (gate <- Seq(DriverLoop.MaxRows, 0L)) {
+      val e = intercept[Exception] {
+        DriverLoop.withMaxRows(gate)(Dedup.connectedComponents(withNull).collect())
+      }
+      assert(e.getMessage.contains("null id in pair list"), s"gate $gate: ${e.getMessage}")
+    }
   }
 
   test("simhash: hot chunk buckets capped, planted exact-dup survives") {

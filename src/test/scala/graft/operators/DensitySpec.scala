@@ -57,15 +57,15 @@ class DensitySpec extends SparkSpec {
     // 30 collinear points spaced eps/2: each has 4 ball-mates (±1, ±2)
     // → all core at minPts 5, one filament cluster of diameter ~15 —
     // the shape that overruns a diameter-bounded label loop at scale.
-    // a driver-loop bound of 0 forces the bigStar closure; labels must
+    // a driver-loop bound of 0 forces star contraction; labels must
     // equal the default (driver union-find) path exactly.
     val chain = (0L until 30L).map(i => (i, i * 50L, 0L))
     val viaDriver = run(chain, eps = 100L, minPts = 5)
-    val viaBigStar = DriverLoop.withMaxRows(0L) {
+    val viaStar = DriverLoop.withMaxRows(0L) {
       Density.dbscan(chain.toDF("id", "xm", "ym"), eps = 100L, minPts = 5)
         .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
     }
-    assert(viaBigStar === viaDriver)
+    assert(viaStar === viaDriver)
     // chain ENDS (ids 0, 1, 28, 29) see only 2-3 ball-mates → border;
     // the cluster label is the min CORE id, 2
     assert(chain.forall(p => viaDriver(p._1)._2 === 2L),

@@ -4,10 +4,10 @@ import graft.SparkSpec
 
 /** Pins the round-15 small-graph driver gate ([[DriverLoop]])
   * BIT-EQUAL to the distributed loops it routes around, per operator —
-  * the same two-path equality discipline DensitySpec applies to the
-  * dbscan closure router and DedupSpec to connectedComponents'
-  * union-find. `DriverLoop.withMaxRows(0)` forces the distributed path;
-  * the default bound takes the driver path on these graphs.
+  * the same two-path equality discipline DensitySpec and GraphsSpec
+  * apply to connectedComponents' union-find and star contraction.
+  * `DriverLoop.withMaxRows(0)` forces the distributed path; the default
+  * bound takes the driver path on these graphs.
   */
 class GraphsDriverGateSpec extends SparkSpec {
   import spark.implicits._

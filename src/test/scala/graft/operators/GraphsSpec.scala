@@ -283,10 +283,10 @@ class GraphsSpec extends SparkSpec {
   private def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  test("bigStarComponents equals connectedComponents on paths, cliques, and random graphs") {
-    // the star alternation and min-label propagation must agree label-
-    // for-label; paths are the adversarial case (diameter = n, where
-    // label propagation needs n rounds but star contraction O(log n))
+  test("connectedComponents: driver union-find equals star contraction on paths, cliques, and random graphs") {
+    // paths are the adversarial case: diameter = n, where a per-hop
+    // label loop needs n rounds but star contraction O(log n) — so the
+    // 40-path runs at DEFAULT arguments on both paths
     val cases: Seq[(String, Seq[(Long, Long)])] = Seq(
       "long path" -> (1L to 40L).sliding(2).map(s => (s(1), s(0))).toSeq,
       "two cliques + singleton self-pair" ->
@@ -301,27 +301,42 @@ class GraphsSpec extends SparkSpec {
         (a, b)
       })
     for ((name, pairs) <- cases) {
+      // reference labels: in-memory min-label propagation to its fixpoint
+      val ids = pairs.flatMap(p => Seq(p._1, p._2)).distinct
+      var want = ids.map(i => i -> i).toMap
+      var moved = true
+      while (moved) {
+        val next = pairs.foldLeft(want) { case (m, (a, b)) =>
+          val l = math.min(m(a), m(b)); m.updated(a, l).updated(b, l)
+        }
+        moved = next != want
+        want = next
+      }
       val df = pairs.toDF("id_a", "id_b")
-      val star = labelsOf(Graphs.bigStarComponents(df))
-      val prop = labelsOf(Dedup.connectedComponents(df, maxIter = 80))
-      assert(star === prop, s"$name: star-contraction labels diverge")
-      // distributed-loop path too (driver fast path disabled)
-      val loop = DriverLoop.withMaxRows(0L)(labelsOf(Dedup.connectedComponents(df, maxIter = 80)))
-      assert(star === loop, s"$name: star labels diverge from the distributed loop")
+      val driver = labelsOf(Dedup.connectedComponents(df))
+      assert(driver === want, s"$name: driver union-find labels are not min-id labels")
+      val star = DriverLoop.withMaxRows(0L)(labelsOf(Dedup.connectedComponents(df)))
+      assert(star === driver, s"$name: star-contraction labels diverge from driver union-find")
     }
   }
 
-  test("bigStarComponents labels every component by its minimum id") {
+  test("connectedComponents labels every component by its minimum id on both paths") {
     val pairs = Seq((5L, 3L), (3L, 9L), (20L, 21L)).toDF("id_a", "id_b")
-    val got = labelsOf(Graphs.bigStarComponents(pairs))
-    assert(got === Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 20L -> 20L, 21L -> 20L))
+    val want = Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 20L -> 20L, 21L -> 20L)
+    assert(labelsOf(Dedup.connectedComponents(pairs)) === want)
+    assert(DriverLoop.withMaxRows(0L)(labelsOf(Dedup.connectedComponents(pairs))) === want)
   }
 
-  test("bigStarComponents rejects non-integral ids and empty graphs behave") {
+  test("connectedComponents rejects non-integral ids; empty and self-pair-only graphs behave") {
     val bad = Seq(("a", "b")).toDF("id_a", "id_b")
-    val e = intercept[IllegalArgumentException](Graphs.bigStarComponents(bad))
+    val e = intercept[IllegalArgumentException](Dedup.connectedComponents(bad))
     assert(e.getMessage.contains("integral id type"))
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    assert(Graphs.bigStarComponents(empty).count() === 0L)
+    assert(Dedup.connectedComponents(empty).count() === 0L)
+    // a self-pair is one undirected edge, over a bound of 0: the star
+    // rounds run on an empty canonical edge set and still label the id
+    val selfOnly = Seq((7L, 7L)).toDF("id_a", "id_b")
+    assert(DriverLoop.withMaxRows(0L)(labelsOf(Dedup.connectedComponents(selfOnly))) ===
+      Map(7L -> 7L))
   }
 }
