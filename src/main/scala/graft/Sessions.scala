@@ -20,8 +20,8 @@ object Sessions {
 
   /** Runs `body` with the session conf keys `kvs` set, then puts each
     * key back as it was — its previous value, or unset if it had none —
-    * also when `body` throws. The one way an operator overrides session
-    * conf for its own duration.
+    * also when `body` throws. The one way code overrides session conf
+    * for its own duration (the streaming runners' state-store scopes).
     *
     * SINGLE-WRITER assumption: the override is session-global while
     * `body` runs, so a concurrent query planned on the same SparkSession

@@ -46,8 +46,6 @@ object CleanPipeline {
       fallbackScrapedAt: Option[String] = None,
       exactPythonTitle: Boolean = false): EtlResult = {
 
-    raw0.sparkSession.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-
     // -- load_raw_data (etl.py:228-254): snake_case + scraped_at backfill
     val snake = raw0.toDF(raw0.columns.toSeq.map(Cleaning.toSnakeCase): _*)
       .withColumn(RowIdx, monotonically_increasing_id())

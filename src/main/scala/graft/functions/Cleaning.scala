@@ -134,12 +134,20 @@ object Cleaning {
   /** decode_isq (scraper.py:263-280): URL-decode, split on `#`, split each
     * part on the FIRST `:` → trimmed map; partless/empty-key entries
     * dropped. Kept as a real MapType instead of the reference's lossy
-    * "; "-joined string. Caller must set
-    * spark.sql.mapKeyDedupPolicy=LAST_WIN to match Python dict semantics. */
+    * "; "-joined string. A repeated key behaves as in the Python dict:
+    * it keeps its first position and takes its last value. The map is
+    * built from already-distinct keys, so this holds under the
+    * session's default map-key dedup policy. */
   def decodeIsq(c: Column): Column = {
-    val m = str_to_map(url_decode(c), lit("#"), lit(":"))
-    val trimmed = transform_values(transform_keys(m, (k, _) => trim(k)), (_, v) => trim(v))
-    map_filter(trimmed, (k, v) => k =!= "" && v.isNotNull)
+    val entries = filter(
+      transform(split(url_decode(c), "#"), p => {
+        val kv = split(p, ":", 2)
+        struct(trim(kv.getItem(0)).as("k"), trim(get(kv, lit(1))).as("v"))
+      }),
+      e => e("k") =!= "" && e("v").isNotNull)
+    val keys = array_distinct(transform(entries, e => e("k")))
+    map_from_arrays(keys, transform(keys, k =>
+      element_at(filter(entries, e => e("k") === k), -1)("v")))
   }
 
   /** The reference's flattened "`k=v; k=v`" rendering of the isq map

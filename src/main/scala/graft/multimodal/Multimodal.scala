@@ -319,13 +319,6 @@ object Multimodal {
     }
   }
 
-  /** Frame sampling shape for videos: explode into (media_id, frame_idx)
-    * rows without decoding — the plan-level skeleton a real sampler fills. */
-  def sampleFrames(features: DataFrame, everyNth: Int): DataFrame =
-    features.filter(col("kind") === "video" && col("n_frames") > 0)
-      .select(col("media_id"),
-        explode(sequence(lit(0), col("n_frames") - 1, lit(everyNth))).as("frame_idx"))
-
   /** REAL file ingestion via Spark's built-in `binaryFile` source — the
     * 100 TB entry point for an image/audio corpus on object storage:
     * each file becomes one row of (path, modificationTime, length,

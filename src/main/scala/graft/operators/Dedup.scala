@@ -161,7 +161,39 @@ object Dedup {
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, minJaccard: Double = 0.5,
-      maxDf: Int = DefaultMaxDf): DataFrame = {
+      maxDf: Int = DefaultMaxDf): DataFrame =
+    sharedShingles(df, idCol, textCol, k, maxDf)
+      .withColumn("uni", col("n_a") + col("n_b") - col("inter"))
+      .filter(col("inter") * lit(100) >= col("uni") * lit((minJaccard * 100).toInt))
+      .select(col("id_a"), col("id_b"), col("inter").cast(LongType),
+        col("uni").cast(LongType))
+
+  /** CONTAINMENT near-dup pairs (asymmetric Jaccard): inter/|smaller| —
+    * detects a document INCLUDED in a larger one (quoting, expansion,
+    * aggregation pages), which symmetric Jaccard structurally misses: a
+    * 100-shingle doc fully contained in a 10000-shingle doc has
+    * containment 1.0 but Jaccard < 0.01. Same df-capped shared-shingle
+    * blocking and integer arithmetic as [[ngramJaccardPairs]] (the
+    * filter cross-multiplies, so no engine compares a derived float);
+    * emits (id_a, id_b, inter, n_a, n_b) with id_a < id_b and
+    * containment = inter / least(n_a, n_b) ≥ minContainment. */
+  def containmentPairs(
+      df: DataFrame, idCol: String, textCol: String,
+      k: Int = 3, minContainment: Double = 0.8,
+      maxDf: Int = DefaultMaxDf): DataFrame =
+    sharedShingles(df, idCol, textCol, k, maxDf)
+      .filter(col("inter") * lit(100) >=
+        least(col("n_a"), col("n_b")) * lit((minContainment * 100).toInt))
+      .select(col("id_a"), col("id_b"), col("inter").cast(LongType),
+        col("n_a").cast(LongType), col("n_b").cast(LongType))
+
+  /** The df-capped shared-shingle blocking behind [[ngramJaccardPairs]]
+    * and [[containmentPairs]]: (id_a, id_b, inter, n_a, n_b) for every
+    * doc pair with id_a < id_b that shares at least one capped k-shingle,
+    * where `inter` counts the shared capped shingles and `n_a`/`n_b` each
+    * doc's capped shingle count. */
+  private def sharedShingles(df: DataFrame, idCol: String, textCol: String,
+      k: Int, maxDf: Int): DataFrame = {
     // cache BOTH sides of the cap: the raw exploded set feeds the df
     // pass AND the semi-join left side (tokenize + shingle-hash would
     // otherwise run twice), and the capped set feeds the self-join
@@ -176,48 +208,12 @@ object Dedup {
         TextAnalysis.tokens(col(textCol)), k)).as("shingle")))
     val sh = Caches.register(dropHotKeys(raw, Seq("shingle"), maxDf))
     val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val inter = sh.as("a").join(sh.as("b"),
+    sh.as("a").join(sh.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("inter"))
-    inter
       .join(sizes.select(col("id").as("id_a"), col("n").as("n_a")), "id_a")
       .join(sizes.select(col("id").as("id_b"), col("n").as("n_b")), "id_b")
-      .withColumn("uni", col("n_a") + col("n_b") - col("inter"))
-      .filter(col("inter") * lit(100) >= col("uni") * lit((minJaccard * 100).toInt))
-      .select(col("id_a"), col("id_b"), col("inter").cast(LongType),
-        col("uni").cast(LongType))
-  }
-
-  /** CONTAINMENT near-dup pairs (asymmetric Jaccard): inter/|smaller| —
-    * detects a document INCLUDED in a larger one (quoting, expansion,
-    * aggregation pages), which symmetric Jaccard structurally misses: a
-    * 100-shingle doc fully contained in a 10000-shingle doc has
-    * containment 1.0 but Jaccard < 0.01. Same df-capped shared-shingle
-    * blocking and integer arithmetic as [[ngramJaccardPairs]] (the
-    * filter cross-multiplies, so no engine compares a derived float);
-    * emits (id_a, id_b, inter, n_a, n_b) with id_a < id_b and
-    * containment = inter / least(n_a, n_b) ≥ minContainment. */
-  def containmentPairs(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, minContainment: Double = 0.8,
-      maxDf: Int = DefaultMaxDf): DataFrame = {
-    val raw = Caches.register(df.select(col(idCol).as("id"),
-      explode(graft.expressions.TextHashExprs.shingleHashes64(
-        TextAnalysis.tokens(col(textCol)), k)).as("shingle")))
-    val sh = Caches.register(dropHotKeys(raw, Seq("shingle"), maxDf))
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val inter = sh.as("a").join(sh.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("id").as("id_a"), col("n").as("n_a")), "id_a")
-      .join(sizes.select(col("id").as("id_b"), col("n").as("n_b")), "id_b")
-      .filter(col("inter") * lit(100) >=
-        least(col("n_a"), col("n_b")) * lit((minContainment * 100).toInt))
-      .select(col("id_a"), col("id_b"), col("inter").cast(LongType),
-        col("n_a").cast(LongType), col("n_b").cast(LongType))
   }
 
   /** Cross-source content overlap matrix: for every pair of sources, the
@@ -353,7 +349,7 @@ object Dedup {
       val out = driverComponents(spark, edges)
       ckpt.delete(0)
       out
-    } else starComponents(spark, edges, nEdges, maxIter, ckpt)
+    } else starComponents(edges, maxIter, ckpt)
   }
 
   /** Connected components via ALTERNATING STAR CONTRACTIONS (the
@@ -362,7 +358,7 @@ object Dedup {
     * and Beyond"): O(log n) rounds where plain min-label propagation pays
     * one round per hop of diameter — the star alternation halves the
     * tree height every round. `edges` is [[connectedComponents]]' directed
-    * edge set, `nEdges` its undirected count.
+    * edge set.
     *
     * One round over the canonical (u < v) edge relation =
     *  - LARGE-STAR: every node x re-attaches each strictly-LARGER
@@ -390,11 +386,9 @@ object Dedup {
     * Scale: the edge relation only ever shrinks (star contraction never
     * adds edges beyond the re-attachments it removes); every shuffle is
     * keyed on a vertex; the driver sees one 2-column checksum row per
-    * round and never a vertex. Rounds run at
-    * [[DriverLoop.roundPartitions]], set through
-    * [[graft.Sessions.withConfs]]. */
-  private def starComponents(spark: SparkSession, edges: DataFrame, nEdges: Long,
-      maxIter: Int, ckpt: DriverLoop.RoundCheckpoints): DataFrame = {
+    * round and never a vertex. Rounds run on the session's conf. */
+  private def starComponents(edges: DataFrame, maxIter: Int,
+      ckpt: DriverLoop.RoundCheckpoints): DataFrame = {
     def checksum(df: DataFrame): (Long, java.math.BigDecimal) = {
       val r = df.agg(count(lit(1)),
         sum(xxhash64(col("u"), col("v")).cast(DecimalType(38, 0)))).head()
@@ -408,47 +402,44 @@ object Dedup {
     var prev = checksum(e)
     var converged = false
     var round = 0
-    graft.Sessions.withConfs(spark,
-        "spark.sql.shuffle.partitions" -> DriverLoop.roundPartitions(spark, nEdges).toString) {
-      // Round shape note (r16): an "attach to the per-key minimum" could
-      // also be ONE window min over the key instead of rollup + equi-join
-      // back — measured on the sf0.1 pair graph the two are
-      // indistinguishable, and the rollup+join form keeps partial
-      // (map-side) aggregation AND stays AQE-skew-splittable where a
-      // window partition cannot be split (guide §2.5) — late rounds
-      // concentrate a whole component's edges on its root vertex, which
-      // is exactly the partition a skew split has to save.
-      while (!converged && round < maxIter) {
-        // LARGE-STAR over the directed neighbor view
-        val nbr = e.select(col("u").as("x"), col("v").as("y"))
-          .union(e.select(col("v").as("x"), col("u").as("y")))
-        val mL = nbr.groupBy(col("x"))
-          .agg(least(min(col("y")), first(col("x"))).as("m"))
-        val ls = ckpt(nbr.join(mL, "x").filter(col("y") > col("x"))
-          .select(col("m").as("u"), col("y").as("v"))
-          .distinct())
-        val lsGen = ckpt.generations - 1
-        // SMALL-STAR on the canonical relation: group the smaller
-        // endpoints (and the node itself) under each v, attach to their min
-        val mS = ls.groupBy(col("v")).agg(min(col("u")).as("m"))
-        val ss = ckpt(ls.join(mS, "v")
-          .select(col("m").as("nu"), col("u").as("nv"))
-          .union(mS.select(col("m").as("nu"), col("v").as("nv")))
-          .filter(col("nu") =!= col("nv"))
-          .select(least(col("nu"), col("nv")).as("u"),
-            greatest(col("nu"), col("nv")).as("v"))
-          .distinct(), eager = false)
-        val cur = checksum(ss)
-        // `ss` is materialized: the previous round's edges and this
-        // round's large-star are unreferenced; reclaim them
-        if (eGen > 0) ckpt.delete(eGen)
-        ckpt.delete(lsGen)
-        e = ss
-        eGen = ckpt.generations - 1
-        converged = cur == prev
-        prev = cur
-        round += 1
-      }
+    // Round shape note (r16): an "attach to the per-key minimum" could
+    // also be ONE window min over the key instead of rollup + equi-join
+    // back — measured on the sf0.1 pair graph the two are
+    // indistinguishable, and the rollup+join form keeps partial
+    // (map-side) aggregation AND stays AQE-skew-splittable where a
+    // window partition cannot be split (guide §2.5) — late rounds
+    // concentrate a whole component's edges on its root vertex, which
+    // is exactly the partition a skew split has to save.
+    while (!converged && round < maxIter) {
+      // LARGE-STAR over the directed neighbor view
+      val nbr = e.select(col("u").as("x"), col("v").as("y"))
+        .union(e.select(col("v").as("x"), col("u").as("y")))
+      val mL = nbr.groupBy(col("x"))
+        .agg(least(min(col("y")), first(col("x"))).as("m"))
+      val ls = ckpt(nbr.join(mL, "x").filter(col("y") > col("x"))
+        .select(col("m").as("u"), col("y").as("v"))
+        .distinct())
+      val lsGen = ckpt.generations - 1
+      // SMALL-STAR on the canonical relation: group the smaller
+      // endpoints (and the node itself) under each v, attach to their min
+      val mS = ls.groupBy(col("v")).agg(min(col("u")).as("m"))
+      val ss = ckpt(ls.join(mS, "v")
+        .select(col("m").as("nu"), col("u").as("nv"))
+        .union(mS.select(col("m").as("nu"), col("v").as("nv")))
+        .filter(col("nu") =!= col("nv"))
+        .select(least(col("nu"), col("nv")).as("u"),
+          greatest(col("nu"), col("nv")).as("v"))
+        .distinct(), eager = false)
+      val cur = checksum(ss)
+      // `ss` is materialized: the previous round's edges and this
+      // round's large-star are unreferenced; reclaim them
+      if (eGen > 0) ckpt.delete(eGen)
+      ckpt.delete(lsGen)
+      e = ss
+      eGen = ckpt.generations - 1
+      converged = cur == prev
+      prev = cur
+      round += 1
     }
     if (!converged) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIter star-contraction rounds " +

@@ -13,9 +13,9 @@ import scala.util.DynamicVariable
   * relation, never a fraction of the corpus: 2e6 rows is about 50 MB of
   * driver arrays, the order of a broadcast-join build side.
   *
-  * The distributed rounds share two more pieces: [[roundPartitions]]
-  * sizes their shuffles and [[RoundCheckpoints]] truncates their
-  * lineage. */
+  * The distributed rounds share one more piece: [[RoundCheckpoints]]
+  * truncates their lineage. They run on the session's own conf (its
+  * shuffle partitions, AQE coalescing, its broadcast threshold). */
 object DriverLoop {
 
   val MaxRows: Long = 2000000L
@@ -30,16 +30,6 @@ object DriverLoop {
     * is how specs pin the two paths equal. */
   private[graft] def withMaxRows[T](n: Long)(body: => T): T =
     bound.withValue(n)(body)
-
-  /** Shuffle partitions for the rounds over a `rows`-row graph: one per
-    * 250k rows, capped at the session setting so a genuinely huge graph
-    * still spreads out. Every round pays per-partition task overhead on
-    * each of its shuffles, and the round state is graph-sized, not
-    * corpus-sized. Sites apply it through [[graft.Sessions.withConfs]]. */
-  private[graft] def roundPartitions(spark: SparkSession, rows: Long): Int = {
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
-    math.max(1L, math.min(sessionParts, rows / 250000L + 1L)).toInt
-  }
 
   /** Lineage truncation for a round loop: each round references the
     * previous one, so an uncut plan grows per round and Catalyst analysis

@@ -72,8 +72,7 @@ object Graphs {
     * graph every iteration would otherwise re-shuffle. A durable
     * `checkpointDir` forces the distributed loop (executor-loss
     * durability is the caller's explicit ask). The distributed rounds
-    * run at [[DriverLoop.roundPartitions]] with auto-broadcast off, both
-    * set through [[graft.Sessions.withConfs]]. */
+    * run on the session's conf. */
   def pagerank(
       edges: DataFrame, srcCol: String, dstCol: String, weightCol: String,
       iterations: Int, dampingPct: Int = 85,
@@ -136,41 +135,32 @@ object Graphs {
     val hasDangling =
       vertices.join(srcSet, Seq("id"), "left_anti").limit(1).count() > 0
 
-    // rank and edge relations are graph-sized: at scale NEITHER side of
-    // the round joins may broadcast, and locally the sub-10MB cached
-    // relations otherwise get re-broadcast (driver-side hash build +
-    // GC churn) every round — the r6 bench's erratic per-round spikes.
-    // Explicit broadcast() hints (the 1-row dangling total) still apply.
-    graft.Sessions.withConfs(spark,
-        "spark.sql.shuffle.partitions" -> DriverLoop.roundPartitions(spark, nEdges).toString,
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      var ranks = ckpt(vertices.select(col("id"),
-        when(isTele, lit(RankScale / nT)).otherwise(lit(0L)).as("rank_fp")))
-      for (_ <- 1 to iterations) {
-        val contribs = ranks.join(shares, ranks("id") === shares("src"))
-          .groupBy(col("dst").as("id"))
-          .agg(sum(expr(s"rank_fp * share_ppm DIV $ShareScale")).as("contrib"))
-        val joined = vertices.join(contribs, Seq("id"), "left")
-        val withDang =
-          if (!hasDangling) joined.withColumn("dang", lit(0L))
-          else {
-            // 1-row dangling-mass aggregate, broadcast back over all
-            // vertices; coalesce covers the empty-sum-is-null case
-            val dangling = ranks.join(srcSet, Seq("id"), "left_anti")
-              .agg(coalesce(sum(col("rank_fp")), lit(0L)).as("dang"))
-            joined.crossJoin(broadcast(dangling))
-          }
-        ranks = ckpt(withDang
-          .withColumn("_in", coalesce(col("contrib"), lit(0L)) +
-            when(isTele, expr(s"dang DIV $nT")).otherwise(lit(0L)))
-          .select(col("id"),
-            (base + expr(s"$dampingPct * _in DIV 100")).as("rank_fp")))
-        // keep current + parent
-        if (ckpt.generations >= 3) ckpt.delete(ckpt.generations - 3)
-      }
-      ranks.select(col("id"), col("rank_fp"),
-        round(col("rank_fp").cast("double") / RankScale, 6).as("rank"))
+    var ranks = ckpt(vertices.select(col("id"),
+      when(isTele, lit(RankScale / nT)).otherwise(lit(0L)).as("rank_fp")))
+    for (_ <- 1 to iterations) {
+      val contribs = ranks.join(shares, ranks("id") === shares("src"))
+        .groupBy(col("dst").as("id"))
+        .agg(sum(expr(s"rank_fp * share_ppm DIV $ShareScale")).as("contrib"))
+      val joined = vertices.join(contribs, Seq("id"), "left")
+      val withDang =
+        if (!hasDangling) joined.withColumn("dang", lit(0L))
+        else {
+          // 1-row dangling-mass aggregate, broadcast back over all
+          // vertices; coalesce covers the empty-sum-is-null case
+          val dangling = ranks.join(srcSet, Seq("id"), "left_anti")
+            .agg(coalesce(sum(col("rank_fp")), lit(0L)).as("dang"))
+          joined.crossJoin(broadcast(dangling))
+        }
+      ranks = ckpt(withDang
+        .withColumn("_in", coalesce(col("contrib"), lit(0L)) +
+          when(isTele, expr(s"dang DIV $nT")).otherwise(lit(0L)))
+        .select(col("id"),
+          (base + expr(s"$dampingPct * _in DIV 100")).as("rank_fp")))
+      // keep current + parent
+      if (ckpt.generations >= 3) ckpt.delete(ckpt.generations - 3)
     }
+    ranks.select(col("id"), col("rank_fp"),
+      round(col("rank_fp").cast("double") / RankScale, 6).as("rank"))
   }
 
   /** Dense 0-based index over vertex ids in first-seen order, for the
@@ -283,8 +273,7 @@ object Graphs {
     *
     * Graphs of at most [[DriverLoop.maxRows]] distinct edges run the
     * identical BigInt fixed point in driver arrays. The distributed
-    * rounds run at [[DriverLoop.roundPartitions]] with auto-broadcast
-    * off, both set through [[graft.Sessions.withConfs]]. */
+    * rounds run on the session's conf. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations=$iterations must be >= 1")
@@ -318,38 +307,30 @@ object Graphs {
         .select(col("id"),
           expr(s"CAST((CAST(raw AS DECIMAL(38,0)) * $HitsScale) DIV s AS BIGINT)").as(out))
     }
-    // no auto-broadcast in the loop: score relations are vertex-sized
-    // (huge at scale) and locally the repeated driver-side hash builds
-    // were the r6 bench's dominant q_hits cost; the explicit 1-row
-    // total broadcast() hints in rescale are unaffected
-    graft.Sessions.withConfs(spark,
-        "spark.sql.shuffle.partitions" -> DriverLoop.roundPartitions(spark, nEdges).toString,
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      // the init relation needs no checkpoint — its lineage is one
-      // projection over the cached vertex set; round 1's checkpoint cuts it
-      var h = vertices.select(col("id"), lit(HitsScale).as("h_fp"))
-      var a: DataFrame = null
-      var prevACache: DataFrame = null
-      for (_ <- 1 to iterations) {
-        val aRaw = Caches.register(h.join(e, h("id") === e("src"))
-          .groupBy(col("dst").as("id")).agg(sum(col("h_fp")).as("raw")))
-        a = rescale(aRaw, "a_fp")
-        val hRaw = a.join(e, a("id") === e("dst"))
-          .groupBy(col("src").as("id")).agg(sum(col("a_fp")).as("raw"))
-        h = rescale(hRaw.localCheckpoint(), "h_fp")
-        // the checkpoint job just consumed the PREVIOUS round's a-cache
-        // for the last time; the final round's cache stays live because
-        // the returned (lazy) plan still reads it
-        if (prevACache != null) prevACache.unpersist()
-        prevACache = aRaw
-      }
-      vertices
-        .join(h, Seq("id"), "left")
-        .join(a, Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("h_fp"), lit(0L)).as("hub_fp"),
-          coalesce(col("a_fp"), lit(0L)).as("auth_fp"))
+    // the init relation needs no checkpoint — its lineage is one
+    // projection over the cached vertex set; round 1's checkpoint cuts it
+    var h = vertices.select(col("id"), lit(HitsScale).as("h_fp"))
+    var a: DataFrame = null
+    var prevACache: DataFrame = null
+    for (_ <- 1 to iterations) {
+      val aRaw = Caches.register(h.join(e, h("id") === e("src"))
+        .groupBy(col("dst").as("id")).agg(sum(col("h_fp")).as("raw")))
+      a = rescale(aRaw, "a_fp")
+      val hRaw = a.join(e, a("id") === e("dst"))
+        .groupBy(col("src").as("id")).agg(sum(col("a_fp")).as("raw"))
+      h = rescale(hRaw.localCheckpoint(), "h_fp")
+      // the checkpoint job just consumed the PREVIOUS round's a-cache
+      // for the last time; the final round's cache stays live because
+      // the returned (lazy) plan still reads it
+      if (prevACache != null) prevACache.unpersist()
+      prevACache = aRaw
     }
+    vertices
+      .join(h, Seq("id"), "left")
+      .join(a, Seq("id"), "left")
+      .select(col("id"),
+        coalesce(col("h_fp"), lit(0L)).as("hub_fp"),
+        coalesce(col("a_fp"), lit(0L)).as("auth_fp"))
   }
 
   /** The in-memory twin of [[hits]]'s distributed loop: identical
@@ -420,9 +401,7 @@ object Graphs {
     * fixpoint); `maxIter` bounds adversarial chains — hitting it THROWS,
     * because a partially-peeled graph is not a k-core. Peel-round count
     * is bounded by the longest degeneracy chain, not corpus size —
-    * single digits on real graphs. Rounds run at
-    * [[DriverLoop.roundPartitions]] with auto-broadcast off, both set
-    * through [[graft.Sessions.withConfs]]. */
+    * single digits on real graphs. Rounds run on the session's conf. */
   def kcore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxIter: Int = 30): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
@@ -439,33 +418,28 @@ object Graphs {
     // reads the just-checkpointed symmetric relation, no rescan)
     if (nEdges <= DriverLoop.maxRows)
       return kcoreDriver(spark, und.collect(), k, maxIter)
-    // the survivor set is vertex-sized — never auto-broadcast it (see hits)
-    graft.Sessions.withConfs(spark,
-        "spark.sql.shuffle.partitions" -> DriverLoop.roundPartitions(spark, nEdges).toString,
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      var prevCount = Long.MaxValue
-      var core: Option[DataFrame] = None
-      var i = 0
-      var deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
-      while (core.isEmpty && i < maxIter) {
-        val keep = deg.filter(col("deg") >= k).localCheckpoint()
-        val n = keep.count()
-        // fixpoint (nothing peeled) or everything peeled (empty core)
-        if (n == prevCount || n == 0L) core = Some(keep)
-        else {
-          prevCount = n
-          und = und
-            .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
-            .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-            .localCheckpoint()
-          deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
-          i += 1
-        }
+    var prevCount = Long.MaxValue
+    var core: Option[DataFrame] = None
+    var i = 0
+    var deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
+    while (core.isEmpty && i < maxIter) {
+      val keep = deg.filter(col("deg") >= k).localCheckpoint()
+      val n = keep.count()
+      // fixpoint (nothing peeled) or everything peeled (empty core)
+      if (n == prevCount || n == 0L) core = Some(keep)
+      else {
+        prevCount = n
+        und = und
+          .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
+          .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
+          .localCheckpoint()
+        deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
+        i += 1
       }
-      core.getOrElse(throw new IllegalStateException(
-        s"Graphs.kcore: no fixpoint after maxIter=$maxIter peel rounds — " +
-          "raise maxIter (a partially-peeled graph is not a k-core)"))
     }
+    core.getOrElse(throw new IllegalStateException(
+      s"Graphs.kcore: no fixpoint after maxIter=$maxIter peel rounds — " +
+        "raise maxIter (a partially-peeled graph is not a k-core)"))
   }
 
   /** The in-memory twin of [[kcore]]'s distributed peel: identical

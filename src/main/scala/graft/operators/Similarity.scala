@@ -185,14 +185,8 @@ object Similarity {
     * measured-safe margin on the 128 GiB probe host — only 200k was
     * exercised, so the ceiling stays well under the theoretical
     * broadcast limits). */
-  // env override is a bench A/B hook (measured at sf1: broadcast 20.8 s
-  // vs shuffled 21.1 s — neutral where both fit; the bound matters only
-  // where the shuffled attach spills, which is exactly where broadcast wins)
   private val BroadcastAttachMaxVectors: Long =
-    sys.env.get("SPARK_GRAFT_ATTACH_BCAST_MAX").map(_.toLong).getOrElse {
-      val heapBudget = (Runtime.getRuntime.maxMemory() * 0.10).toLong
-      math.min(2000000L, heapBudget / 3200L)
-    }
+    math.min(2000000L, (Runtime.getRuntime.maxMemory() * 0.10).toLong / 3200L)
 
   /** The cached (id, vec, norm) relation + count the pair verify
     * attaches to — built once per distinct vector set; multi-generation

@@ -32,24 +32,6 @@ object Sources {
     }
   }
 
-  /** S1 robustness variant: PERMISSIVE parse capturing malformed lines in
-    * `_corrupt_record` instead of nulling them silently — at 100 TB of
-    * scraped CSV, quarantining bad rows (write the corrupt column to a
-    * side table) beats both failing the job (FAILFAST) and losing rows
-    * (DROPMALFORMED). */
-  def readRawCsvPermissive(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructField}
-    val withCorrupt = org.apache.spark.sql.types.StructType(
-      Schemas.raw.fields :+ StructField("_corrupt_record", StringType))
-    spark.read
-      .option("header", "true").option("multiLine", "true")
-      .option("quote", "\"").option("escape", "\"")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .schema(withCorrupt)
-      .csv(path)
-  }
-
   /** S2 — CSV sink with the reference's literal-"NaN" missing convention
     * (etl.py:419). Quotes escape by DOUBLING (escape = quote), matching
     * both the pandas writer this mirrors and every reader in this file —
@@ -62,12 +44,6 @@ object Sources {
       .option("quote", "\"").option("escape", "\"")
       .csv(path)
 
-  /** S3 — append-mode sink (the scraper's incremental per-keyword writes,
-    * scraper.py:568-573). On parquet, append is transactional per task via
-    * the file-commit protocol — no header-if-new-file dance needed. */
-  def appendParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Append).parquet(path)
-
   /** S4 — JSONL sink (scraper.py:532-536): one JSON object per line. */
   def writeJsonl(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).json(path)
@@ -79,28 +55,6 @@ object Sources {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  /** S5 — DB-table sink (the reference's SQLite `to_sql("products",
-    * if_exists="replace")`, etl.py:428-435): a managed catalog table,
-    * replace ≡ overwrite. */
-  def writeTable(df: DataFrame, table: String): Unit =
-    df.write.mode(SaveMode.Overwrite).saveAsTable(table)
-
-  /** S5 literal variant — JDBC sink (the reference writes through a DB
-    * driver; `saveAsTable` above maps the SEMANTICS, this maps the
-    * mechanism). `overwrite` + truncate-off reproduces
-    * `if_exists="replace"` exactly: drop, recreate, insert. No JDBC
-    * driver ships in this environment, so the spec covers the builder
-    * wiring via the writer's format/options (the execution path is
-    * Spark's own jdbc connector). */
-  def writeJdbc(df: DataFrame, url: String, table: String,
-      props: Map[String, String] = Map.empty): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-      .format("jdbc")
-      .option("url", url)
-      .option("dbtable", table)
-    props.foldLeft(w) { case (b, (k, v)) => b.option(k, v) }.save()
-  }
-
   /** Columnar-sink alternative — ORC (same writer surface as parquet;
     * useful when the downstream warehouse is ORC-native). Round-trips
     * through the declared schema like every other source here. */
@@ -111,17 +65,10 @@ object Sources {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.schema(schema).orc(path)
 
-  /** The 100 TB fact-table layout: write partitioned by a low-cardinality
-    * derived key (e.g. event date) so date-bounded queries PRUNE
-    * partitions at planning time instead of scanning and filtering.
-    * `PartitionedLayoutSpec` asserts the pruning (PartitionFilters
-    * non-empty, unselected partitions never read). */
-  def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-
-  /** S6 — SQL scan over the catalog (check_db.py:7-16). */
+  /** S6 — SQL scan over the catalog (check_db.py:7-16): the row count
+    * and a 5-row sample of a table. The reference's S5 table write
+    * (`to_sql(..., if_exists="replace")`) is Spark's own
+    * `saveAsTable` in overwrite mode. */
   def tableCounts(spark: SparkSession, table: String): (Long, DataFrame) = {
     val n = spark.sql(s"SELECT COUNT(*) AS n FROM $table").collect()(0).getLong(0)
     (n, spark.sql(s"SELECT * FROM $table LIMIT 5"))

@@ -9,7 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * host. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = Sessions.local(cpus = 4)
-    .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
     // fresh warehouse per JVM: the in-memory catalog forgets tables across
     // sessions but their directories would otherwise persist and collide
     .config("spark.sql.warehouse.dir",

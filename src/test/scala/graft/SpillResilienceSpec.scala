@@ -119,10 +119,9 @@ class SpillResilienceSpec extends SparkSpec {
     // lets the same code run at 32 or 20k partitions). withMaxRows(0)
     // forces the distributed star-contraction rounds: at the default bound
     // the sf0.01 pair graph (25 pairs) closes by driver union-find and no
-    // round shuffles at all. The rounds themselves run at
-    // DriverLoop.roundPartitions, which is 1 at this size either way, so
-    // the session count varied here reaches the pair generation and the
-    // edge materialization before the loop
+    // round shuffles at all. The rounds run at the session's partition
+    // count, so the single partition reaches every star round as well as
+    // the pair generation and the edge materialization before the loop
     def run() = SparkEntry.queries("q_dedup_components")(spark, Dir)
       .collect().toSeq
     operators.DriverLoop.withMaxRows(0L) {

@@ -119,6 +119,13 @@ class CleaningSpec extends SparkSpec {
     val m2 = Seq(odd).toDF("c").select(decodeIsq(col("c")).as("m"))
       .collect()(0).getMap[String, String](0)
     assert(m2 == Map("K" -> "a:b", "Empty" -> ""))
+    // a repeated key (also one that only trimming makes repeat) keeps its
+    // first position and its last value, as a Python dict does, under
+    // the session's default map-key policy
+    val dup = java.net.URLEncoder.encode("K:1#J:2# K :3#J", "UTF-8")
+    val flat2 = Seq(dup).toDF("c").select(isqFlatten(decodeIsq(col("c"))).as("f"))
+      .collect()(0).getString(0)
+    assert(flat2 == "K=3; J=2")
   }
 
   test("shortLabel (analysis.py:81-85)") {

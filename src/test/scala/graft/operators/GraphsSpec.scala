@@ -53,10 +53,10 @@ class GraphsSpec extends SparkSpec {
 
   test("deterministic across partitionings: 1 vs 32 shuffle partitions") {
     // withMaxRows(0) forces the distributed loop (a 200-edge graph takes
-    // the driver path by default, where no shuffle runs). Its rounds run
-    // at DriverLoop.roundPartitions, which is 1 at this size, so the
-    // session count varied here reaches the edge summing, shares and
-    // vertex set built before the loop
+    // the driver path by default, where no shuffle runs). The rounds run
+    // at the session's partition count, so the count varied here reaches
+    // every round shuffle as well as the edge summing, shares and vertex
+    // set built before the loop
     val edges = (0L until 200L).map(i => (i, (i * 7 + 3) % 200L, 1L + i % 5))
     def at(parts: String) = DriverLoop.withMaxRows(0L) {
       graft.Sessions.withConfs(spark, "spark.sql.shuffle.partitions" -> parts) {

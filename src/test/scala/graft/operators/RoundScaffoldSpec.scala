@@ -3,9 +3,10 @@ package graft.operators
 import graft.{Sessions, SparkSpec}
 
 /** Pins the one scoped session-conf override ([[Sessions.withConfs]]) and
-  * the one round scaffold ([[DriverLoop.roundPartitions]],
-  * [[DriverLoop.RoundCheckpoints]]): the scope restores what it changed
-  * on every exit, and no operator hand-rolls either piece again. */
+  * the one round scaffold ([[DriverLoop.RoundCheckpoints]]): the scope
+  * restores what it changed on every exit, no operator hand-rolls either
+  * piece again, and the batch operators and the ETL run on the session's
+  * conf rather than changing it. */
 class RoundScaffoldSpec extends SparkSpec {
   import spark.implicits._
 
@@ -32,8 +33,8 @@ class RoundScaffoldSpec extends SparkSpec {
     assert(ex.getMessage === "boom")
     assertRestored("after a throw")
 
-    // kcore's distributed peel returns its fixpoint from inside the scope
-    // and throws from it on maxIter: both exits restore the round confs
+    // kcore's distributed peel returns its fixpoint and throws on
+    // maxIter: neither exit leaves the session conf changed
     val keys = Seq(parts, "spark.sql.autoBroadcastJoinThreshold")
     val confs = keys.map(spark.conf.getOption)
     val k5 = for (a <- 0L until 5L; b <- 0L until 5L if a < b) yield (a, b)
@@ -68,5 +69,22 @@ class RoundScaffoldSpec extends SparkSpec {
       t <- tokens if text.contains(t)
     } yield s"$p: $t"
     assert(hits.isEmpty, s"hand-rolled conf scope or round scaffold in:\n${hits.mkString("\n")}")
+
+    // the rounds run at the session's shuffle partitions (AQE coalesces
+    // small round shuffles) and broadcast threshold, and no entry point's
+    // conf is changed behind Sessions: no operator sets either key (a
+    // `key -> v` scope or a `set(key, v)`; reading one is fine), and
+    // nothing in the program names a map-key dedup policy (the token is
+    // split so this file does not match its own scan)
+    val opsDir = root.resolve("graft/operators")
+    val roundConf =
+      """"spark\.sql\.(shuffle\.partitions|autoBroadcastJoinThreshold)"\s*(->|,)""".r
+    val overrides = files.flatMap { p =>
+      val text = java.nio.file.Files.readString(p)
+      (if (p.startsWith(opsDir)) roundConf.findAllMatchIn(text).map(m => s"$p: ${m.group(1)} override").toSeq
+        else Nil) ++
+      (if (text.contains("mapKeyDedup" + "Policy")) Seq(s"$p: map-key dedup policy") else Nil)
+    }
+    assert(overrides.isEmpty, s"session conf changed behind Sessions in:\n${overrides.mkString("\n")}")
   }
 }

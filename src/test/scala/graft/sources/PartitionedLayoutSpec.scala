@@ -18,7 +18,7 @@ class PartitionedLayoutSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("graft_part").toString
     val ev = Tables.events(spark, Dir)
       .withColumn("event_date", date_format($"ts", "yyyy-MM-dd"))
-    Sources.writePartitioned(ev, out, Seq("event_date"))
+    ev.write.mode("overwrite").partitionBy("event_date").parquet(out)
 
     val read = spark.read.parquet(out)
     val bounded = read.filter($"event_date" >= "2024-01-10" && $"event_date" <= "2024-01-12")
