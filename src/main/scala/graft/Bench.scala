@@ -9,14 +9,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local().getOrCreate()
-    // SPARK_GRAFT_CONF="k=v;k=v" extra confs (local experiment aid).
-    // Applied AFTER getOrCreate: builder configs are silently ignored
-    // when a session already exists in the JVM, while conf.set applies
-    // to any runtime-settable key (and throws on static ones — the
-    // honest behavior for a bench override that would otherwise not
-    // take effect). Values must not contain ';'.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
     spark.sparkContext.setLogLevel("WARN")
 
     // JVM/codegen warmup outside the timed region. Purely SYNTHETIC data
@@ -100,21 +92,8 @@ object Bench {
       // divides — inside the noise floor, so the third run is paid for
       // everyone, not just the tail. A failed run (-1) must stay -1,
       // never win the min.
-      // SPARK_GRAFT_STEADY_RUNS (default 3) trims the steady repetitions
-      // for DECADE PROBES (sf10) where single queries run minutes: at
-      // that magnitude GC/CPU-frequency noise is sub-10%, and 3× repeats
-      // of a 200 s query buy nothing but wall-clock. The default — and
-      // every committed BENCH_* artifact — stays min-of-3 (+4th for the
-      // slow tail).
-      // fail fast on garbage, clamp to >= 1: zero/negative would leave
-      // `steadies` empty and throw from .min deep inside the run
-      val steadyRuns = sys.env.get("SPARK_GRAFT_STEADY_RUNS").map { v =>
-        val n = try v.toInt catch { case _: NumberFormatException =>
-          sys.error(s"SPARK_GRAFT_STEADY_RUNS must be a positive integer, got '$v'") }
-        math.max(1, n)
-      }.getOrElse(3)
       val c = once(); clear()
-      val steadies = Seq.fill(steadyRuns) { val r = once(); clear(); r }
+      val steadies = Seq.fill(3) { val r = once(); clear(); r }
       val st = if (steadies.exists(_ < 0)) -1.0 else steadies.min
       (q.name, c, st, () => { val r = once(); clear(); r })
     }

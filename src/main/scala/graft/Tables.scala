@@ -27,15 +27,29 @@ object Tables {
   /** events.ts has shipped as TWO parquet physical layouts across data
     * generations: TIMESTAMP(NANOS) (which Spark only reads as a long under
     * the legacy conf) and plain TIMESTAMP(MICROS, isAdjustedToUTC=false)
-    * (which Spark reads as TIMESTAMP_NTZ). Normalize BOTH to session-zoned
-    * TimestampType so every downstream query and oracle sees one shape:
+    * (which Spark reads as TIMESTAMP_NTZ). [[normalizeEventsTs]] maps both
+    * to session-zoned TimestampType so every downstream query and oracle
+    * sees one shape. */
+  def events(spark: SparkSession, sfDir: String): DataFrame = {
+    readNanosAsLong(spark)
+    normalizeEventsTs(load(spark, sfDir, "events"))
+  }
+
+  /** The one session-conf write outside [[Sessions]], shared by every
+    * events loader (batch and streaming): TIMESTAMP(NANOS) files read as
+    * their raw long instead of failing. It is not scoped, because whether
+    * the conf must still hold when a lazily returned scan executes is
+    * open (ROADMAP item 1). */
+  private[graft] def readNanosAsLong(spark: SparkSession): Unit =
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+  /** A batch or streaming events frame with `ts` in any shipped layout →
+    * the same frame with `ts` as session-zoned TimestampType:
     * - nanos-long → exact integer DIV to µs (a double division would lose
     *   precision at 1.7e18 ns), then timestamp_micros;
     * - NTZ → cast to TimestampType (identical instants under the UTC
     *   session zone every entry point pins). */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(spark, sfDir, "events")
+  private[graft] def normalizeEventsTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     raw.schema("ts").dataType match {

@@ -7,8 +7,8 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 /** Round-2 surface widening: the window-function family, CUBE grouping
-  * sets, grouped exact quantiles, token counting with an oracle, skew-
-  * salted aggregation in the contract, and a REAL Structured Streaming
+  * sets, grouped exact quantiles, token counting with an oracle, a
+  * heavy-hitter count per user, and a REAL Structured Streaming
   * query (AvailableNow) whose result is oracle-checked against the batch
   * SQL — the streaming and batch paths must agree row-for-row.
   */
@@ -116,18 +116,19 @@ object ExtendedQueries {
       GROUP BY token ORDER BY n DESC, token LIMIT 30""")
   )
 
-  /** Skew-salted heavy-hitter count in the driver contract: two-stage
-    * groupBy(key, salt) → groupBy(key) so one hot key spreads across
-    * `salts` reducers — identical results to the plain GROUP BY the
-    * oracle runs. */
+  /** Heavy-hitter count per user: the plain GROUP BY the oracle runs.
+    * The registered name stays; the query no longer salts. Spark's
+    * partial aggregation already sends at most one row per map task and
+    * user through the shuffle, so a hot user cannot swamp a reducer. A
+    * salt stage is a second shuffle, and measured slower (steady 0.41 vs
+    * 0.25 s at sf0.1, 3.1 vs 1.4 s on 1e7 rows with one user holding half
+    * of them; CHANGES.md). */
   val qSaltedTopUsers = GraftQuery(
     "q_salted_top_users",
     (s, dir) => {
       import s.implicits._
-      graft.operators.Skew.saltedAgg(
-          Tables.events(s, dir), $"user_id", count(lit(1)),
-          c => sum(c).cast(LongType), salts = 16)
-        .select($"key".as("user_id"), $"value".as("n"))
+      Tables.events(s, dir)
+        .groupBy($"user_id").agg(count(lit(1)).as("n"))
         .orderBy($"n".desc, $"user_id").limit(10)
     },
     Some("""SELECT user_id, COUNT(*) AS n FROM events

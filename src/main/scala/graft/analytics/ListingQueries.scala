@@ -103,15 +103,22 @@ object ListingQueries {
   }
 
   /** /api/scatter-rating-price/ (views.py:227-245) + chart 10: P6 p99 clip
-    * + P9 bounded sample. pandas' seeded sample is engine-specific; the
-    * deterministic distributed equivalent is a rand(seed)-ranked top-N —
-    * same row count, stable across runs and partitionings. */
-  def scatterRatingPrice(df: DataFrame, maxPoints: Int = 1500, seed: Long = 42): DataFrame = {
+    * + P9 bounded sample. pandas' seeded sample is engine-specific; here the
+    * sample is the `maxPoints` rows with the smallest xxhash64 of the
+    * listing key (product_url, dispid) and the plotted pair. The hash reads
+    * only row content, so the sample is the same across runs and across
+    * partition layouts (unlike `rand(seed)`, which Spark seeds per
+    * partition). (x, y) breaks hash ties: rows still tied after it plot as the
+    * same point, so whichever of them the limit keeps, the output is the
+    * same. */
+  def scatterRatingPrice(df: DataFrame, maxPoints: Int = 1500): DataFrame = {
     val d = df.filter(col("rating").isNotNull && col("price_numeric").isNotNull)
     val p99 = d.agg(expr("percentile(price_numeric, 0.99D)").as("p99"))
     d.crossJoin(broadcast(p99)).filter(col("price_numeric") <= col("p99"))
-      .select(col("rating").as("x"), col("price_numeric").as("y"))
-      .orderBy(rand(seed)).limit(maxPoints)
+      .select(col("rating").as("x"), col("price_numeric").as("y"),
+        xxhash64(col("product_url"), col("dispid"), col("rating"), col("price_numeric")).as("_h"))
+      .orderBy(col("_h"), col("x"), col("y")).limit(maxPoints)
+      .drop("_h")
   }
 
   /** /api/mini-rows/ + table head(30) (views.py:84-90,249-278): P8 limit

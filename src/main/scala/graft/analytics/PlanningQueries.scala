@@ -208,13 +208,13 @@ object PlanningQueries {
             (CAST(n_keys AS DOUBLE) * CAST(n_rows AS DOUBLE)), 6) AS gini
         FROM a$tag, t$tag)"""
 
-  /** Join/aggregation KEY SKEW report — the measurement that justifies
-    * (or vetoes) the [[graft.operators.Skew]] mitigations before a big
-    * shuffle: for each candidate key, how concentrated the per-key row
-    * counts are. top1_share ≈ the share of the shuffle landing on ONE
-    * reducer; gini summarizes the whole tail. Three representative keys
-    * (two lineitem FKs + the events actor key) in one result so the
-    * report reads as a comparison. */
+  /** Join/aggregation KEY SKEW report: for each candidate key, how
+    * concentrated the per-key row counts are. top1_share ≈ the share of
+    * a shuffle landing on ONE reducer when no partial aggregate runs
+    * before it (a join or a window; AQE's skew join splits such a
+    * sort-merge-join partition at runtime); gini summarizes the whole
+    * tail. Three representative keys (two lineitem FKs + the events
+    * actor key) in one result so the report reads as a comparison. */
   val qKeySkewReport = GraftQuery(
     "q_key_skew_report",
     (s, dir) => {

@@ -12,14 +12,12 @@ import org.apache.spark.sql.types._
   * aggregate from the original parquet, so any round-trip loss (type
   * coercion, quoting, NaN sentinels, JSON escaping) breaks the hash.
   *
-  * Scratch layout: a deterministic per-SF-dir path under the JVM temp
-  * dir, overwrite mode — re-runs replace rather than accumulate, and
-  * the read-back DataFrame stays valid for the caller's later action
-  * (a delete-after-build would race Bench/Verify's lazy execution).
+  * Scratch layout: [[Scratch.dir]], a per-JVM, per-SF-dir path, overwrite
+  * mode — re-runs replace rather than accumulate, and the read-back
+  * DataFrame stays valid for the caller's later action (a delete-after-
+  * build would race Bench/Verify's lazy execution).
   */
 object SourceQueries {
-
-  private def scratch(prefix: String, dir: String): String = Scratch.dir(prefix, dir)
 
   /** S6 — the SQL text entry point: registered catalog views + a pure
     * `spark.sql` program (fact-fact join, decimal rollup). Proves a SQL
@@ -50,7 +48,7 @@ object SourceQueries {
     "q_csv_roundtrip",
     (s, dir) => {
       import s.implicits._
-      val out = scratch("csv_rt", dir)
+      val out = Scratch.dir("csv_rt", dir)
       Sources.writeCsvNaN(
         Tables.orders(s, dir).select($"o_orderkey", $"o_custkey", $"o_orderstatus",
           $"o_totalprice",
@@ -85,7 +83,7 @@ object SourceQueries {
     "q_jsonl_roundtrip",
     (s, dir) => {
       import s.implicits._
-      val out = scratch("jsonl_rt", dir)
+      val out = Scratch.dir("jsonl_rt", dir)
       Sources.writeJsonl(Tables.documents(s, dir), out)
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType),
@@ -148,7 +146,7 @@ object SourceQueries {
     "q_orc_roundtrip",
     (s, dir) => {
       import s.implicits._
-      val out = scratch("orc_rt", dir)
+      val out = Scratch.dir("orc_rt", dir)
       val sel = Tables.lineitem(s, dir).select($"l_orderkey", $"l_linenumber",
         $"l_returnflag", $"l_quantity", $"l_extendedprice", $"l_shipdate")
       graft.sources.Sources.writeOrc(sel, out)
@@ -181,7 +179,7 @@ object SourceQueries {
     "q_schema_evolution",
     (s, dir) => {
       import s.implicits._
-      val out = scratch("schema_evo", dir)
+      val out = Scratch.dir("schema_evo", dir)
       val o = Tables.orders(s, dir)
       o.filter($"o_orderkey" % 2 === 0)
         .select($"o_orderkey", $"o_custkey", $"o_totalprice")
@@ -226,7 +224,7 @@ object SourceQueries {
     "q_zorder_scan",
     (s, dir) => {
       import s.implicits._
-      val out = scratch("zorder_li", dir)
+      val out = Scratch.dir("zorder_li", dir)
       // bits = 4 (16 rank buckets per column): the Morton layout needs only
       // coarse buckets to make min/max stats selective, and the quantile
       // pass dominates the rewrite cost at high bit width — 255 cuts at
@@ -268,7 +266,7 @@ object SourceQueries {
     "q_resilient_ingest",
     (s, dir) => {
       import s.implicits._
-      val pagesDir = scratch("resilient_pages", dir)
+      val pagesDir = Scratch.dir("resilient_pages", dir)
       graft.sources.ResilientSource.stagePages(
         Tables.events(s, dir), pagesDir, nPages = 8)
       val ingested = s.read

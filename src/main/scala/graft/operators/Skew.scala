@@ -1,48 +1,19 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation utilities (SURVEY.md §7.4 risk, prompt scale rules):
-  * salting for hot keys in aggregations and joins, plus the bucketed-layout
-  * helper for co-located (shuffle-free) fact-to-fact joins.
+/** Bucketed layout for co-located (shuffle-free) fact-to-fact joins.
   *
-  * AQE's skew-join handling (on by default in Spark 4) covers sort-merge
-  * joins at runtime; explicit salting remains the tool for skewed
-  * AGGREGATIONS and for deterministic layouts.
+  * Key skew itself is left to Spark: a count or sum over a hot key is
+  * partially aggregated in every map task before the shuffle (at most one
+  * row per task and key crosses it), and AQE's skew join splits a hot
+  * sort-merge-join partition at runtime. Hand salting adds a shuffle or
+  * replicates the join's right side; measured on local[4] it was slower
+  * than these plain plans on every input (CHANGES.md). q_key_skew_report
+  * measures the skew itself.
   */
 object Skew {
-
-  /** Two-stage salted aggregation: groupBy(key, salt) partial → groupBy(key)
-    * final. A hot key spreads over `salts` reducers in stage 1; stage 2
-    * combines `salts` rows per key — O(keys×salts) tiny. Correct for any
-    * commutative re-aggregable pair (sum/sum, count/sum, min/min, ...). */
-  def saltedAgg(
-      df: DataFrame, key: Column, valueExpr: Column, finalExpr: Column => Column,
-      salts: Int = 16): DataFrame =
-    df.withColumn("_salt", pmod(spark_partition_id() + monotonically_increasing_id(), lit(salts)))
-      .groupBy(key.as("key"), col("_salt"))
-      .agg(valueExpr.as("partial"))
-      .groupBy(col("key"))
-      .agg(finalExpr(col("partial")).as("value"))
-
-  /** Salted join for a skewed LEFT key against a small-ish right side:
-    * left gets a random salt in [0, salts), right is replicated `salts`
-    * times — the hot key's rows land on `salts` different reducers.
-    * (For a genuinely small right side prefer broadcast(); this is for the
-    * middle ground where the right side is too big to broadcast.) */
-  def saltedJoin(
-      left: DataFrame, right: DataFrame, leftKey: String, rightKey: String,
-      salts: Int = 16): DataFrame = {
-    val saltedLeft = left.withColumn("_salt",
-      pmod(pmod(hash(col(leftKey), monotonically_increasing_id()), lit(salts)) + lit(salts), lit(salts)))
-    val replicatedRight = right.withColumn("_salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    saltedLeft.join(replicatedRight,
-        saltedLeft(leftKey) === replicatedRight(rightKey) &&
-          saltedLeft("_salt") === replicatedRight("_salt"))
-      .drop("_salt")
-  }
 
   /** Write both sides bucketed by the join key: subsequent joins between
     * the two tables are co-located — SortMergeJoin with NO Exchange.

@@ -185,8 +185,8 @@ final class ResilientScan(dir: String, maxAttempts: Int, maxInjected: Int,
   // settings — s3a/gs credentials, endpoints, custom fs.* schemes — must
   // reach both the planner's listing and the executor-side page open, or
   // the object-storage claim below is false. newHadoopConf() copies
-  // RUNTIME conf entries verbatim (a `spark.conf.set("spark.hadoop.X")`
-  // lands under the prefixed key Hadoop ignores), so the prefix is
+  // RUNTIME conf entries verbatim (a runtime `spark.hadoop.X` session
+  // conf lands under the prefixed key Hadoop ignores), so the prefix is
   // stripped here the same way SparkContext does for startup entries —
   // runtime credential updates reach the readers too.
   private val hadoopConf = {

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.functions.col
-
 /** Smoke guard over the whole driver contract: every registered query
-  * must run at sf0.001, produce a non-empty schema with unique names, and
-  * every oracle key must reference a registered query. Catches breakage
-  * in no-oracle queries that the DuckDB gate can't see. */
+  * must run at sf0.001 with every projected column executed and produce
+  * a non-empty schema with unique names, and every oracle key must
+  * reference a registered query. Catches breakage in no-oracle queries
+  * that the DuckDB gate can't see. */
 class RegistrySpec extends SparkSpec {
 
   private val Dir = "/root/testdata/sf0.001"
@@ -34,8 +33,9 @@ class RegistrySpec extends SparkSpec {
       val df = q.run(spark, Dir)
       assert(df.columns.nonEmpty)
       assert(df.columns.distinct.length === df.columns.length, "duplicate column names")
-      val n = df.count()
-      assert(n >= 0)
+      // the noop sink runs the complete physical plan, as graft.Bench does;
+      // count() would let Catalyst prune every column it does not need
+      df.write.format("noop").mode("overwrite").save()
     }
   }
 }

@@ -6,7 +6,8 @@ import graft.{Sessions, SparkSpec}
   * the one round scaffold ([[DriverLoop.RoundCheckpoints]]): the scope
   * restores what it changed on every exit, no operator hand-rolls either
   * piece again, and the batch operators and the ETL run on the session's
-  * conf rather than changing it. */
+  * conf rather than changing it: the only session-conf write outside
+  * Sessions is the events loaders' shared nanosAsLong switch. */
 class RoundScaffoldSpec extends SparkSpec {
   import spark.implicits._
 
@@ -86,5 +87,19 @@ class RoundScaffoldSpec extends SparkSpec {
       (if (text.contains("mapKeyDedup" + "Policy")) Seq(s"$p: map-key dedup policy") else Nil)
     }
     assert(overrides.isEmpty, s"session conf changed behind Sessions in:\n${overrides.mkString("\n")}")
+
+    // the one session-conf write outside Sessions is Tables'
+    // readNanosAsLong, shared by the batch and streaming events loaders;
+    // any other `conf.set(` in the program changes an entry point's conf
+    // behind Sessions
+    val confSet = """conf\.set\(""".r
+    val sharedSite = """def readNanosAsLong\([^)]*\): Unit =\s*spark\.conf\.set\(""".r
+    val writes = files.filter(_.getFileName.toString != "Sessions.scala").flatMap { p =>
+      val text = java.nio.file.Files.readString(p)
+      val n = confSet.findAllMatchIn(text).size
+      val allowed = if (p.getFileName.toString == "Tables.scala") sharedSite.findAllMatchIn(text).size else 0
+      if (n > allowed) Some(s"$p: ${n - allowed} conf.set( outside readNanosAsLong") else None
+    }
+    assert(writes.isEmpty, s"session conf written outside Sessions in:\n${writes.mkString("\n")}")
   }
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** SCALING.md claims AQE's skew-join handling covers sort-merge-join
   * skew at runtime — this spec makes that concrete: a join with one hot
-  * key must show AQE's skew split in the final plan, and the explicit
-  * salting utilities must agree with their unsalted formulations. */
+  * key must show AQE's skew split in the final plan. It is the reason the
+  * engine carries no hand-salted join. */
 class SkewJoinSpec extends SparkSpec {
 
   test("AQE splits the skewed SMJ partition at runtime") {
@@ -46,17 +46,5 @@ class SkewJoinSpec extends SparkSpec {
       assert(p.contains("skew=true"),
         s"AQE did not mark the skewed join — thresholds or data shape off:\n$p")
     }
-  }
-
-  test("saltedAgg matches the unsalted aggregate on a skewed key") {
-    import spark.implicits._
-    val df = spark.range(100000)
-      .select(when($"id" % 10 =!= 0, 0L).otherwise($"id" % 97).as("k"),
-        lit(1.0).as("v"))
-    val salted = Skew.saltedAgg(df, $"k", sum($"v"), partial => sum(partial))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    val plain = df.groupBy($"k").agg(sum($"v").as("s"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    assert(salted === plain)
   }
 }
