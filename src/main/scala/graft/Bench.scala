@@ -38,10 +38,7 @@ object Bench {
         .filter(col("rn") <= 3)
         .write.format("noop").mode("overwrite").save()
       // clean the temp dir — the warmup leaves no filesystem residue
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(warmDir.toFile)
+      org.apache.hadoop.fs.FileUtil.fullyDelete(warmDir.toFile)
     }
 
     // two timed runs per query: run 1 includes one-time whole-stage

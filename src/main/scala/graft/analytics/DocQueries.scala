@@ -1228,8 +1228,7 @@ object DocQueries {
     (s, dir) => {
       import s.implicits._
       Dedup.minhashDedupPairs(Tables.documents(s, dir), "doc_id", "text",
-          k = 3, numHashes = 32, bands = 8, threshold = 0.5, maxBucket = 100,
-          portable = true)
+          k = 3, numHashes = 32, bands = 8, threshold = 0.5, maxBucket = 100)
         .orderBy($"id_a", $"id_b")
     },
     Some(s"""WITH ${MinhashOracle.sigCtes},
@@ -1253,8 +1252,7 @@ object DocQueries {
       import org.apache.spark.sql.types.DoubleType
       val docs = Tables.documents(s, dir)
       val pairs = Dedup.minhashDedupPairs(docs, "doc_id", "text",
-        k = 3, numHashes = 32, bands = 8, threshold = 0.5, maxBucket = 100,
-        portable = true)
+        k = 3, numHashes = 32, bands = 8, threshold = 0.5, maxBucket = 100)
       val sh = graft.operators.Caches.register(docs.select($"doc_id",
         graft.expressions.TextHashExprs.shingleHashes64(
           TextAnalysis.tokens($"text"), 3, portable = true).as("hs")))
@@ -1288,7 +1286,7 @@ object DocQueries {
     (s, dir) => {
       import s.implicits._
       Dedup.simhashPairs(Tables.documents(s, dir), "doc_id", "text",
-          maxHamming = 3, maxBucket = 100, portable = true)
+          maxHamming = 3, maxBucket = 100)
         .orderBy($"id_a", $"id_b")
     },
     Some("""WITH t AS (SELECT doc_id,
@@ -1338,7 +1336,7 @@ object DocQueries {
       val q = emb.orderBy($"vec_id").limit(1)
         .select($"embedding").collect()(0).getSeq[Double](0)
       val ann = Similarity.annTopK(emb, "vec_id", "embedding", q, k = 20,
-        nPlanes = 3, portablePlanes = true)
+        nPlanes = 3)
       Similarity.withRecall(ann,
           Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 20), "vec_id", 20)
         .orderBy($"cos_sim".desc, $"vec_id")
@@ -4103,11 +4101,11 @@ object DocQueries {
       import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
       val sig = graft.operators.Caches.register(
         Dedup.minhashSignatures(Tables.documents(s, dir), "doc_id", "text",
-          k = 3, numHashes = 32, portable = true))
+          k = 3, numHashes = 32))
       def config(r: Int): DataFrame = {
         val b = 32 / r
         Dedup.minhashPairsFromSignatures(sig, 32, b, threshold = 0.5,
-            maxBucket = 100, portable = true)
+            maxBucket = 100)
           .agg(count(lit(1)).cast(LongType).as("n_pairs"),
             round(coalesce(sum($"est_jaccard".cast(DecimalType(18, 6))), lit(0))
               .cast(DoubleType) / greatest(count(lit(1)), lit(1L)), 6)

@@ -349,8 +349,7 @@ object ExtendedQueries {
     (s, dir) => {
       import s.implicits._
       graft.operators.Dedup.winnowPairs(Tables.documents(s, dir),
-          "doc_id", "text", k = 3, w = 4, minShared = 2, maxDf = 100,
-          portable = true)
+          "doc_id", "text", k = 3, w = 4, minShared = 2, maxDf = 100)
         .orderBy($"id_a", $"id_b")
     },
     Some("""WITH t AS (SELECT doc_id,
@@ -1508,11 +1507,8 @@ object ExtendedQueries {
       }
       require(dst.setLastModified(1700000000000L + i * 60000L))
     }
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-      f.delete(): Unit
-    }
-    (srcDir, spanUs / 1000000L + 60L, () => rm(new java.io.File(srcDir)))
+    (srcDir, spanUs / 1000000L + 60L,
+      () => org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(srcDir)): Unit)
   }
 
   val qStreamFunnelOoo = GraftQuery(

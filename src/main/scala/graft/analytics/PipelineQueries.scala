@@ -779,8 +779,7 @@ object PipelineQueries {
       import org.apache.spark.sql.types.DecimalType
       val pairs = graft.operators.Dedup.minhashDedupPairs(
         Tables.documents(s, dir), "doc_id", "text",
-        k = 3, numHashes = 32, bands = 8, threshold = 0.5, maxBucket = 100,
-        portable = true)
+        k = 3, numHashes = 32, bands = 8, threshold = 0.5, maxBucket = 100)
       def split(c: Column): Column = {
         val h = pmod(pmod(c, lit(2147483647L)) * lit(48271L),
           lit(2147483647L)) % 1000000L
@@ -948,8 +947,7 @@ object PipelineQueries {
       import org.apache.spark.sql.types.DecimalType
       val pairs = graft.operators.Dedup.minhashDedupPairs(
         Tables.documents(s, dir), "doc_id", "text",
-        k = 3, numHashes = 32, bands = 8, threshold = 0.5, maxBucket = 100,
-        portable = true)
+        k = 3, numHashes = 32, bands = 8, threshold = 0.5, maxBucket = 100)
       val src = Tables.documents(s, dir).select($"doc_id", $"source")
       pairs
         .join(broadcast(src.withColumnRenamed("doc_id", "id_a")

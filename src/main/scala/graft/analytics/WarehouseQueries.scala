@@ -358,7 +358,8 @@ object WarehouseQueries {
   }
 
   /** TOP covariance eigenvalue by 12 max-norm power-iteration rounds in
-    * PURE SEQUENTIAL double arithmetic ([[graft.operators.Pca.powerTopEigen]])
+    * PURE SEQUENTIAL double arithmetic (rank 1 of
+    * [[graft.operators.Pca.deflatedSpectrum]], columns renamed)
     * — the oracle-able companion of q_embed_pca: Jacobi's rotation
     * cascade is not practically SQL-expressible, but a fixed-round
     * power iteration is, so DuckDB replays the covariance build, every
@@ -369,8 +370,11 @@ object WarehouseQueries {
     * Rayleigh estimate is bounded by λ_max regardless). */
   val qEmbedTopEigen = GraftQuery(
     "q_embed_top_eigen",
-    (s, dir) => graft.operators.Pca.powerTopEigen(
-      Tables.embeddings(s, dir).select(col("embedding")), "embedding", rounds = 12),
+    (s, dir) => graft.operators.Pca.deflatedSpectrum(
+        Tables.embeddings(s, dir).select(col("embedding")), "embedding",
+        topK = 1, rounds = 12)
+      .select(col("eigenvalue").as("top_eig"), col("resid_rel"), col("trace"),
+        col("explained_share").as("share_top1")),
     Some {
       val rounds = 12
       def matvec(out: String, vPrev: String) =
@@ -599,13 +603,13 @@ object WarehouseQueries {
       val isBatch = (c: org.apache.spark.sql.Column) => c % 5 === 0
       val idx = Scratch.dir("minhash_index", dir)
       Dedup.minhashSignatures(docs.filter(!isBatch($"doc_id")), "doc_id", "text",
-          k = 3, numHashes = 32, portable = true)
+          k = 3, numHashes = 32)
         .write.mode("overwrite").parquet(idx)
       val batchSig = Dedup.minhashSignatures(docs.filter(isBatch($"doc_id")),
-        "doc_id", "text", k = 3, numHashes = 32, portable = true)
+        "doc_id", "text", k = 3, numHashes = 32)
       val allSig = Caches.register(s.read.parquet(idx).unionByName(batchSig))
       val pairs = Dedup.minhashPairsFromSignatures(allSig, numHashes = 32,
-        bands = 8, threshold = 0.5, maxBucket = 100, portable = true)
+        bands = 8, threshold = 0.5, maxBucket = 100)
       val dups = pairs
         .filter(isBatch($"id_a") || isBatch($"id_b"))
         .select(when(isBatch($"id_a") && !isBatch($"id_b"), $"id_a")

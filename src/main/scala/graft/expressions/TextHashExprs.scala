@@ -134,7 +134,7 @@ object TextHashKernels {
   }
 
   /** 64-bit SimHash as four 16-bit chunks (same layout as the declarative
-    * Dedup.simhashChunks: vote bit i = bit i of hashString(token); chunk c
+    * Dedup.simhashChunksDeclarative: vote bit i = bit i of hashString(token); chunk c
     * folds votes[16c..16c+15] MSB-first). */
   def simhashChunks(tokens: ArrayData): ArrayData =
     simhashChunksImpl(tokens, portable = false)

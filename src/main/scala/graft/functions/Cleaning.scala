@@ -100,8 +100,7 @@ object Cleaning {
   private val East  = Seq("west bengal", "odisha", "bihar", "jharkhand", "assam")
 
   /** supplier_region_from_state (etl.py:178-197). Hardcoded sets as a
-    * `when` chain; the broadcast-dim formulation lives in
-    * [[regionDim]] for the join-based path. */
+    * `when` chain. */
   def supplierRegionFromState(raw: Column): Column = {
     val s = lower(cleanText(raw))
     when(s.isNull, "Unknown")
@@ -111,13 +110,6 @@ object Cleaning {
       .when(s.isin(East: _*), "East")
       .otherwise("Other/Unknown")
   }
-
-  /** The same state→region mapping as a dimension table for the
-    * broadcast-join formulation (preferred at 100 TB: the mapping scales
-    * without recompiling a when-chain). */
-  def regionDim: Seq[(String, String)] =
-    South.map(_ -> "South") ++ West.map(_ -> "West") ++
-      North.map(_ -> "North") ++ East.map(_ -> "East")
 
   /** price_bucket (etl.py:200-207), applied to the winsorized price. */
   def priceBucket(price: Column): Column =

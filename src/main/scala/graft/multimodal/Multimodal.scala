@@ -310,15 +310,6 @@ object Multimodal {
     }
   }
 
-  /** Media "resize" shape: payload transform keeping lineage columns —
-    * demonstrates the binary→binary batch path (stub: truncate bytes). */
-  def resize(media: Dataset[MediaRow], maxBytes: Int): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map(r => r.copy(payload = r.payload.take(maxBytes)))
-    }
-  }
-
   /** REAL file ingestion via Spark's built-in `binaryFile` source — the
     * 100 TB entry point for an image/audio corpus on object storage:
     * each file becomes one row of (path, modificationTime, length,

@@ -8,6 +8,16 @@ import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType,
 /** Deduplication operator family for training-data pipelines: exact
   * (hash-groupBy), MinHash+LSH, SimHash, n-gram Jaccard.
   *
+  * The near-dup blocking family (MinHash, LSH bands, SimHash, winnowing)
+  * runs ONE scheme: the portable hash family of
+  * [[graft.expressions.TextHashKernels]] (base-31/131 polynomial token
+  * and shingle hashes, affine slot re-hashing, a base-131 band fold) —
+  * integer arithmetic a SQL engine reproduces bit-for-bit, which is what
+  * lets every registered near-dup query carry a DuckDB oracle. The
+  * exact shingle-set operators ([[ngramJaccardPairs]],
+  * [[containmentPairs]], [[sourceOverlap]]) keep the xxhash64 shingle
+  * kernel: they count shared shingles, so only hash equality matters.
+  *
   * Scale notes (100 TB):
   *  - exact dedup is one shuffle on the 16-byte fingerprint — the text
   *    itself never shuffles;
@@ -54,21 +64,21 @@ object Dedup {
 
   /** MinHash signatures as a DataFrame (id, sig):
     *  1. shingle hashes materialize ONCE per doc (native ShingleHashes64
-    *     kernel — xxhash64 of the space-joined shingle bytes);
+    *     kernel — the portable base-31 polynomial of the shingle bytes);
     *  2. the `numHashes` functions derive from the base hash via cheap
-    *     long re-hashing (universal-hash style, native MinHashSignature
-    *     kernel) — never re-tokenizing.
+    *     affine re-hashing (native MinHashSignature kernel) — never
+    *     re-tokenizing.
     * Both steps are fused imperative loops (graft.expressions
-    * .TextHashKernels), bit-identical to the declarative HOF formulation
-    * but without its per-element interpretation cost. */
+    * .TextHashKernels) whose arithmetic [[graft.analytics.MinhashOracle]]
+    * replays in SQL. */
   def minhashSignatures(
       df: DataFrame, idCol: String, textCol: String,
-      k: Int, numHashes: Int, portable: Boolean = false): DataFrame =
+      k: Int, numHashes: Int): DataFrame =
     df.select(col(idCol).as("id"),
         graft.expressions.TextHashExprs.minhashSignature(
           graft.expressions.TextHashExprs.shingleHashes64(
-            TextAnalysis.tokens(col(textCol)), k, portable),
-          numHashes, portable).as("sig"))
+            TextAnalysis.tokens(col(textCol)), k, portable = true),
+          numHashes, portable = true).as("sig"))
 
   /** LSH candidate pairs from a signature DF: band the signature (`bands`
     * bands of rowsPerBand rows), bucket-join docs sharing any band hash.
@@ -78,20 +88,16 @@ object Dedup {
     * degenerated (boilerplate corpus) — it no longer separates near-dups
     * from the crowd. Returns (id_a, id_b) with id_a < id_b, distinct. */
   def lshCandidates(sig: DataFrame, bands: Int, rowsPerBand: Int,
-      maxBucket: Int = DefaultMaxDf, portable: Boolean = false): DataFrame = {
+      maxBucket: Int = DefaultMaxDf): DataFrame = {
     require(bands > 0 && rowsPerBand > 0,
       s"bands=$bands rowsPerBand=$rowsPerBand must be positive")
-    // band key: xxhash64 of the slice by default; in PORTABLE mode a
-    // base-131 fold of the slots seeded with the band index — the same
-    // arithmetic DuckDB runs as list_reduce(list_prepend(band, slice),
-    // (acc, s) -> (acc*131 + s) % 1000000007)
-    val bandKey: Int => Column =
-      if (portable) b =>
-        aggregate(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand),
-          lit(b.toLong),
-          (acc, v) => (acc * lit(131L) + v) % lit(graft.expressions.TextHashKernels.PortableMod))
-      else b =>
-        xxhash64(concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)), lit(b))
+    // band key: a base-131 fold of the slots seeded with the band index —
+    // the same arithmetic DuckDB runs as list_reduce(list_prepend(band,
+    // slice), (acc, s) -> (acc*131 + s) % 1000000007)
+    val bandKey: Int => Column = b =>
+      aggregate(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand),
+        lit(b.toLong),
+        (acc, v) => (acc * lit(131L) + v) % lit(graft.expressions.TextHashKernels.PortableMod))
     val banded = dropHotKeys(
       sig.select(col("id"), posexplode(array((0 until bands).map(bandKey): _*)))
         .toDF("id", "band", "bhash"),
@@ -111,12 +117,11 @@ object Dedup {
   def minhashDedupPairs(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, numHashes: Int = 32, bands: Int = 8,
-      threshold: Double = 0.6, maxBucket: Int = DefaultMaxDf,
-      portable: Boolean = false): DataFrame = {
+      threshold: Double = 0.6, maxBucket: Int = DefaultMaxDf): DataFrame = {
     require(bands > 0 && numHashes % bands == 0,
       s"bands=$bands must divide numHashes=$numHashes (trailing slots would be silently ignored)")
-    val sig = Caches.register(minhashSignatures(df, idCol, textCol, k, numHashes, portable))
-    minhashPairsFromSignatures(sig, numHashes, bands, threshold, maxBucket, portable)
+    val sig = Caches.register(minhashSignatures(df, idCol, textCol, k, numHashes))
+    minhashPairsFromSignatures(sig, numHashes, bands, threshold, maxBucket)
   }
 
   /** Banding + verification over an EXISTING signature relation (id,
@@ -127,11 +132,10 @@ object Dedup {
     * [[minhashDedupPairs]], which now delegates here. */
   def minhashPairsFromSignatures(
       sig: DataFrame, numHashes: Int, bands: Int,
-      threshold: Double, maxBucket: Int = DefaultMaxDf,
-      portable: Boolean = false): DataFrame = {
+      threshold: Double, maxBucket: Int = DefaultMaxDf): DataFrame = {
     require(bands > 0 && numHashes % bands == 0,
       s"bands=$bands must divide numHashes=$numHashes (trailing slots would be silently ignored)")
-    val cand = lshCandidates(sig, bands, numHashes / bands, maxBucket, portable)
+    val cand = lshCandidates(sig, bands, numHashes / bands, maxBucket)
     cand
       .join(sig.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(sig.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
@@ -266,13 +270,13 @@ object Dedup {
   def winnowPairs(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, w: Int = 4, minShared: Int = 2,
-      maxDf: Int = DefaultMaxDf, portable: Boolean = false): DataFrame = {
+      maxDf: Int = DefaultMaxDf): DataFrame = {
     // fingerprints in > maxDf docs are boilerplate, not near-dup signal —
     // drop them before the self-join (see dropHotKeys). The raw explode
     // is cached too: it feeds the df pass and the semi-join left side
     val raw = Caches.register(df.select(col(idCol).as("id"),
       explode(graft.expressions.TextHashExprs.winnowFingerprints(
-        TextAnalysis.tokens(col(textCol)), k, w, portable)).as("fp")))
+        TextAnalysis.tokens(col(textCol)), k, w, portable = true)).as("fp")))
     val fp = Caches.register(dropHotKeys(raw, Seq("fp"), maxDf))
     fp.as("a").join(fp.as("b"),
         col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
@@ -554,19 +558,18 @@ object Dedup {
   }
 
   /** 64-bit SimHash sketch as FOUR 16-bit chunks (array<long>). Per
-    * token, bit i's ±1 vote is bit i of the token's xxhash64 (64
-    * independent vote streams from one hash); sketch bit i is set when
-    * the vote sum is positive. Native fused kernel
+    * token, bit i's ±1 vote is bit i of the token's portable 64-bit hash
+    * (h31 | h131 << 32, see TextHashKernels.portableSimhashChunks); sketch
+    * bit i is set when the vote sum is positive. Native fused kernel
     * (graft.expressions.SimHashChunks) — one pass over the tokens, a
-    * 64-int vote array, no per-token allocation; the equivalent
-    * declarative aggregate/zip_with tree cost ~7 s interpreted per 5k
-    * docs. Map-only. */
-  def simhashChunks(textCol: Column, portable: Boolean = false): Column =
-    graft.expressions.TextHashExprs.simhashChunks(TextAnalysis.tokens(textCol), portable)
+    * 64-int vote array, no per-token allocation. Map-only. */
+  def simhashChunks(textCol: Column): Column =
+    graft.expressions.TextHashExprs.simhashChunks(TextAnalysis.tokens(textCol), portable = true)
 
-  /** The declarative HOF formulation of [[simhashChunks]], kept as the
-    * cross-check oracle for the native kernel (DedupSimilaritySpec
-    * asserts bit-identical output). */
+  /** The declarative HOF formulation of the xxhash64 SimHash kernel
+    * (`TextHashExprs.simhashChunks` with `portable = false`, the
+    * `graft_simhash` SQL function), kept as its cross-check oracle:
+    * TextHashSpec and PropertiesSpec assert bit-identical output. */
   def simhashChunksDeclarative(textCol: Column): Column = {
     val baseHashes = transform(TextAnalysis.tokens(textCol), t => xxhash64(t))
     val voteArr = aggregate(
@@ -593,11 +596,10 @@ object Dedup {
     * probability), verify with the exact hamming distance. */
   def simhashPairs(
       df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, maxBucket: Int = DefaultMaxDf,
-      portable: Boolean = false): DataFrame = {
+      maxHamming: Int = 3, maxBucket: Int = DefaultMaxDf): DataFrame = {
     // cache: the sketch feeds both sides of the self-join (8 longs/doc)
     val sk = Caches.register(
-      df.select(col(idCol).as("id"), simhashChunks(col(textCol), portable).as("sk")))
+      df.select(col(idCol).as("id"), simhashChunks(col(textCol)).as("sk")))
     // over-full (band, chunk) buckets are degenerate blocking keys
     // (boilerplate corpus) — drop before the f² self-join
     val chunks = dropHotKeys(

@@ -62,25 +62,33 @@ object Pca {
     (0 until d).map(i => a(i)(i)).toArray.sorted(Ordering[Double].reverse)
   }
 
-  /** Top-`topK` covariance eigenvalues of `vecCol` with explained-share
-    * and the trace-identity certificate. Output: (rank, eigenvalue,
-    * explained_share, trace, eig_sum, trace_gap). */
-  def covarianceSpectrum(df: DataFrame, vecCol: String, topK: Int): DataFrame = {
-    require(topK > 0, s"topK=$topK must be positive")
-    val spark = df.sparkSession
-    // one corpus pass; d(d+1)/2 rows to the driver (~2k at d=64)
+  /** The d×d covariance matrix of `vecCol` on the driver: one corpus
+    * pass through the fused GramMatrix aggregate, then its d(d+1)/2
+    * upper-triangle cells (~2k at d=64) mirrored into a dense matrix. */
+  private def covarianceMatrix(df: DataFrame, vecCol: String): Array[Array[Double]] = {
     val cells = df.select(col(vecCol).cast("array<double>").as("v"))
       .agg(graft.expressions.GramMatrix.gram(col("v")).as("g"))
       .select(inline(col("g")))
       .select(col("i"), col("j"), col("cov"))
       .collect()
-    require(cells.nonEmpty, "covarianceSpectrum: empty input")
+    require(cells.nonEmpty, "Pca: empty input")
     val d = cells.iterator.map(_.getInt(1)).max
     val m = Array.ofDim[Double](d, d)
     cells.foreach { r =>
       val i = r.getInt(0) - 1; val j = r.getInt(1) - 1; val c = r.getDouble(2)
       m(i)(j) = c; m(j)(i) = c
     }
+    m
+  }
+
+  /** Top-`topK` covariance eigenvalues of `vecCol` with explained-share
+    * and the trace-identity certificate. Output: (rank, eigenvalue,
+    * explained_share, trace, eig_sum, trace_gap). */
+  def covarianceSpectrum(df: DataFrame, vecCol: String, topK: Int): DataFrame = {
+    require(topK > 0, s"topK=$topK must be positive")
+    val spark = df.sparkSession
+    val m = covarianceMatrix(df, vecCol)
+    val d = m.length
     val trace = (0 until d).map(i => m(i)(i)).sum
     val eig = jacobiEigenvalues(m)
     val eigSum = eig.sum
@@ -117,7 +125,8 @@ object Pca {
     * tolerance in PcaSpec. `resid_rel` per rank is the honest accuracy
     * statement — on a flat spectrum the power estimates converge
     * slowly, and deflation compounds whatever error the certificate
-    * reports; what CANNOT drift is cross-engine agreement.
+    * reports; what CANNOT drift is cross-engine agreement. `topK = 1`
+    * is the plain top-eigenvalue power iteration (q_embed_top_eigen).
     *
     * Scale: one corpus pass (the fused Gram aggregate); everything
     * after runs on the d×d driver matrix — topK·rounds O(d²) matvecs on
@@ -128,19 +137,11 @@ object Pca {
       topK: Int, rounds: Int): DataFrame = {
     require(topK >= 1 && rounds >= 1, s"topK=$topK rounds=$rounds must be >= 1")
     val spark = df.sparkSession
-    val cells = df.select(col(vecCol).cast("array<double>").as("v"))
-      .agg(graft.expressions.GramMatrix.gram(col("v")).as("g"))
-      .select(inline(col("g")))
-      .select(col("i"), col("j"), col("cov"))
-      .collect()
-    require(cells.nonEmpty, "deflatedSpectrum: empty input")
-    val d = cells.iterator.map(_.getInt(1)).max
+    val m = covarianceMatrix(df, vecCol)
+    val d = m.length
     require(topK <= d, s"topK=$topK exceeds dimension $d")
-    val m = Array.ofDim[Double](d, d)
-    cells.foreach { r =>
-      val i = r.getInt(0) - 1; val j = r.getInt(1) - 1; val c = r.getDouble(2)
-      m(i)(j) = c; m(j)(i) = c
-    }
+    // all folds below run in ascending index order — the exact order the
+    // oracle's list_reduce replays
     var trace = 0.0
     locally { var i = 0; while (i < d) { trace += m(i)(i); i += 1 } }
     def matvec(x: Array[Double]): Array[Double] = Array.tabulate(d) { i =>
@@ -186,71 +187,5 @@ object Pca {
       StructField("explained_share", DoubleType, nullable = false),
       StructField("resid_rel", DoubleType, nullable = false),
       StructField("trace", DoubleType, nullable = false))))
-  }
-
-  /** TOP eigenvalue by `rounds` max-norm power-iteration steps over the
-    * GramMatrix fixed-point covariance, in PURE SEQUENTIAL double
-    * arithmetic — every multiply/add/divide in a pinned order, so a SQL
-    * engine replays the identical bits (the q_embed_norms parity
-    * argument applied to an ITERATIVE numerical method; this is the
-    * oracle-able companion of the Jacobi spectrum, whose rotations are
-    * not practically SQL-expressible). The estimate is the Rayleigh
-    * quotient of the final iterate; `resid_rel` = max-norm residual
-    * ‖Av − λv‖∞ / λ rides along as the convergence certificate (a flat
-    * spectrum converges slowly — the certificate says HOW slowly, and
-    * the Rayleigh quotient is bounded by λ_max regardless).
-    *
-    * Scale: one corpus pass (the fused Gram aggregate); the iteration
-    * runs on the d×d driver matrix (64×64 here) — same collect
-    * discipline as [[covarianceSpectrum]]. Output columns all go
-    * through floor(x·1e6 + 0.5)/1e6 — the engine-portable rounding. */
-  def powerTopEigen(df: DataFrame, vecCol: String, rounds: Int): DataFrame = {
-    require(rounds >= 1, s"rounds=$rounds must be >= 1")
-    val spark = df.sparkSession
-    val cells = df.select(col(vecCol).cast("array<double>").as("v"))
-      .agg(graft.expressions.GramMatrix.gram(col("v")).as("g"))
-      .select(inline(col("g")))
-      .select(col("i"), col("j"), col("cov"))
-      .collect()
-    require(cells.nonEmpty, "powerTopEigen: empty input")
-    val d = cells.iterator.map(_.getInt(1)).max
-    val m = Array.ofDim[Double](d, d)
-    cells.foreach { r =>
-      val i = r.getInt(0) - 1; val j = r.getInt(1) - 1; val c = r.getDouble(2)
-      m(i)(j) = c; m(j)(i) = c
-    }
-    // all folds below run in ascending index order — the exact order the
-    // oracle's list_reduce replays
-    var trace = 0.0
-    locally { var i = 0; while (i < d) { trace += m(i)(i); i += 1 } }
-    def matvec(x: Array[Double]): Array[Double] = Array.tabulate(d) { i =>
-      var s = 0.0; var j = 0
-      while (j < d) { s += m(i)(j) * x(j); j += 1 }
-      s
-    }
-    val v = Array.fill(d)(1.0)
-    for (_ <- 1 to rounds) {
-      val raw = matvec(v)
-      var mx = 0.0
-      locally { var i = 0; while (i < d) { val a = math.abs(raw(i)); if (a > mx) mx = a; i += 1 } }
-      require(mx > 0, "powerTopEigen: zero covariance matrix")
-      var i = 0
-      while (i < d) { v(i) = raw(i) / mx; i += 1 }
-    }
-    val r2 = matvec(v)
-    var num = 0.0; var den = 0.0
-    locally { var k = 0; while (k < d) { num += v(k) * r2(k); den += v(k) * v(k); k += 1 } }
-    val ray = num / den
-    var resid = 0.0
-    locally { var k = 0; while (k < d) {
-        val a = math.abs(r2(k) - ray * v(k)); if (a > resid) resid = a; k += 1 } }
-    def fp6(x: Double) = math.floor(x * 1000000.0 + 0.5) / 1000000.0
-    spark.createDataFrame(java.util.Arrays.asList(
-      Row(fp6(ray), fp6(resid / ray), fp6(trace), fp6(ray / trace))),
-      StructType(Seq(
-        StructField("top_eig", DoubleType, nullable = false),
-        StructField("resid_rel", DoubleType, nullable = false),
-        StructField("trace", DoubleType, nullable = false),
-        StructField("share_top1", DoubleType, nullable = false))))
   }
 }

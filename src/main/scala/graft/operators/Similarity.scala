@@ -8,6 +8,13 @@ import org.apache.spark.sql.types.DoubleType
   * brute-force cosine top-k as the exact baseline, and a random-hyperplane
   * LSH-bucketed variant as the scale path.
   *
+  * The LSH family runs on ±1 (Rademacher) planes from an integer hash
+  * ([[rademacherPlanes]]) over micro-quantized vectors
+  * ([[portableBucket]]), so every bucket id is integer arithmetic a SQL
+  * oracle replays bit-for-bit. Only [[embeddingDupPairs]] still defaults
+  * to seeded gaussian planes ([[hyperplanes]]); its registered caller
+  * passes `portablePlanes = true`.
+  *
   * Vector math is `zip_with`/`aggregate` over array columns — codegen'd,
   * sequential left-to-right summation (deterministic, engine-comparable).
   * At 100 TB the LSH path turns the O(N) per-query scan into an O(N/2^p)
@@ -138,23 +145,13 @@ object Similarity {
     * precomputed/partitioned so a probe set is a partition-pruned scan. */
   def annTopK(
       df: DataFrame, idCol: String, vecCol: String,
-      query: Seq[Double], k: Int, nPlanes: Int = 4, probeRadius: Int = 1,
-      seed: Long = 42L, portablePlanes: Boolean = false): DataFrame = {
+      query: Seq[Double], k: Int, nPlanes: Int = 4,
+      probeRadius: Int = 1): DataFrame = {
     val dim = query.length
-    val (bucketExpr, qBucket) =
-      if (portablePlanes) {
-        (portableBucketNative(col(vecCol), nPlanes, dim),
-          portableQueryBucket(query, rademacherPlanes(dim, nPlanes)))
-      } else {
-        val planes = hyperplanes(dim, nPlanes, seed)
-        (lshBucket(col(vecCol), planes),
-          planes.foldLeft(0L) { (acc, p) =>
-            acc * 2 + (if (p.zip(query).map { case (x, y) => x * y }.sum >= 0) 1L else 0L)
-          })
-      }
+    val qBucket = portableQueryBucket(query, rademacherPlanes(dim, nPlanes))
     val probes = (0L until (1L << nPlanes))
       .filter(b => java.lang.Long.bitCount(b ^ qBucket) <= probeRadius)
-    df.withColumn("_bucket", bucketExpr)
+    df.withColumn("_bucket", portableBucketNative(col(vecCol), nPlanes, dim))
       .filter(col("_bucket").isin(probes: _*))
       .select(col(idCol), round(cosineNative(col(vecCol), typedLit(query)), 6).as("cos_sim"))
       .orderBy(col("cos_sim").desc, col(idCol))
@@ -335,9 +332,10 @@ object Similarity {
 
   /** SemDeDup-style semantic deduplication: drop every document that has
     * an embedding-cosine near-duplicate with a SMALLER id, keep the rest.
-    * Candidate pairs come from [[embeddingDupPairs]] (LSH-blocked,
-    * multi-probed, df-capped), so the whole operator is one blocked
-    * self-join plus one anti-join — never O(N²).
+    * Candidate pairs come from the MULTI-TABLE pair generator
+    * ([[embeddingDupPairsTables]]: LSH-blocked, multi-probed, df-capped;
+    * `tables = 1` is the single-table blocking), so the whole operator is
+    * one blocked self-join plus one anti-join — never O(N²).
     *
     * SEMANTICS — greedy ε-net pruning, not component collapse: a doc
     * survives iff no lower-id doc sits within the cosine threshold. On a
@@ -348,32 +346,18 @@ object Similarity {
     * connected-component. That is the standard SemDeDup trade: the
     * anti-join closes in ONE pass, while component collapse needs a
     * closure ([[Dedup.connectedComponents]]) — compose that with
-    * [[embeddingDupPairs]] instead when chain-preserving semantics
+    * [[embeddingDupPairsTables]] instead when chain-preserving semantics
     * matter more than a single-pass plan.
+    *
+    * The greedy smaller-id pruning is only as good as the pair surface
+    * under it: at a corpus-adaptive plane count the recall-restoring
+    * L-table union is what keeps a design-point pair (cosine ≥ ~0.95 for
+    * the q_embed_dup_hr ladder) detected with ≥ 90% probability.
     *
     * Scale: the pair list is a post-blocking artifact (orders of
     * magnitude smaller than the corpus) and the dropped-id relation is
     * smaller still, so the anti-join broadcasts at any realistic dup
     * rate; the corpus itself is scanned once and never shuffled. */
-  def semanticDedup(
-      df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, nPlanes: Int = 4, seed: Long = 42L,
-      dim: Int = 64, probeRadius: Int = 1,
-      maxBucket: Int = Dedup.DefaultMaxDf,
-      portablePlanes: Boolean = false): DataFrame = {
-    val pairs = embeddingDupPairs(df, idCol, vecCol, threshold, nPlanes, seed,
-      dim, probeRadius, maxBucket, portablePlanes)
-    val dropped = pairs.select(col("id_b")).distinct()
-    df.join(broadcast(dropped), df(idCol) === dropped("id_b"), "left_anti")
-  }
-
-  /** [[semanticDedup]] over the MULTI-TABLE pair generator
-    * ([[embeddingDupPairsTables]]) — the near-dup-regime production
-    * shape: the greedy smaller-id pruning is only as good as the pair
-    * surface under it, and at a corpus-adaptive plane count the
-    * recall-restoring L-table union is what keeps a design-point pair
-    * (cosine ≥ ~0.95 for the q_embed_dup_hr ladder) detected with ≥ 90%
-    * probability. Same one-pass anti-join semantics and scale shape. */
   def semanticDedupTables(
       df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nPlanes: Int, tables: Int,

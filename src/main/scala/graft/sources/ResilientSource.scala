@@ -103,11 +103,7 @@ object ResilientSource {
         new java.io.File(pagesDir, f"page_$i%02d.tsv").toPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       // clean the staging dir (committer metadata)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(stage))
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(stage))
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.FileUtil
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
@@ -135,7 +136,6 @@ object EventsStream {
         throw new IllegalStateException(
           s"streaming query $name did not finish within 300s — result would be partial")
       }
-      logBatches(name, q)
       val sink = spark.table(name)
       val rows = sink.collect()
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), sink.schema)
@@ -143,24 +143,8 @@ object EventsStream {
       // failure paths must clean up too — checkpoints may live in
       // RAM-backed /dev/shm (ephemeralCheckpoint) and leaks accumulate
       try spark.catalog.dropTempView(name) catch { case _: Exception => () }
-      deleteRecursively(new java.io.File(checkpoint))
+      FileUtil.fullyDelete(new java.io.File(checkpoint))
     }
-
-  /** SPARK_GRAFT_STREAM_DEBUG=1 dumps per-query micro-batch counts —
-    * the evidence behind SCALING.md's "fixed micro-batch overhead, not
-    * per-row cost" claim for the bench's stream family. */
-  private def logBatches(name: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")) {
-      val ps = q.recentProgress
-      System.err.println(s"[stream-batches] $name batches=${ps.length} " +
-        ps.map(p => s"${p.batchId}:${p.numInputRows}").mkString(","))
-    }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))
-    f.delete()
-  }
 
   /** Checkpoint dir for batch-finite runs: tmpfs (/dev/shm) when present
     * — the WAL/state writes of a short AvailableNow run are pure
@@ -197,8 +181,8 @@ object EventsStream {
     // fresh fold, so a surviving checkpoint from a killed prior run
     // (finally skipped) would make AvailableNow skip already-committed
     // batches against empty state — a silently incomplete fold
-    deleteRecursively(new java.io.File(checkpoint))
-    deleteRecursively(new java.io.File(stateDir)) // fresh fold per run
+    FileUtil.fullyDelete(new java.io.File(checkpoint))
+    FileUtil.fullyDelete(new java.io.File(stateDir)) // fresh fold per run
     new java.io.File(stateDir).mkdirs()
     def gens(): Seq[Long] = Option(new java.io.File(stateDir).listFiles())
       .getOrElse(Array.empty).toSeq
@@ -225,7 +209,7 @@ object EventsStream {
           // disk), so a crash between write and checkpoint-commit still
           // finds batch b's input state when b replays.
           gens().filter(_ > batchId)
-            .foreach(g => deleteRecursively(new java.io.File(s"$stateDir/gen-$g")))
+            .foreach(g => FileUtil.fullyDelete(new java.io.File(s"$stateDir/gen-$g")))
           val prev = gens().filter(_ <= batchId)
           val merged = prev.lastOption match {
             case None => delta
@@ -250,7 +234,7 @@ object EventsStream {
           // reclaim generations BEFORE the one this batch read — keeping
           // gen-batchId alive is what makes the replay above possible
           prev.filter(_ < batchId)
-            .foreach(g => deleteRecursively(new java.io.File(s"$stateDir/gen-$g")))
+            .foreach(g => FileUtil.fullyDelete(new java.io.File(s"$stateDir/gen-$g")))
         }
         .queryName(name)
         .option("checkpointLocation", checkpoint)
@@ -262,10 +246,9 @@ object EventsStream {
         throw new IllegalStateException(
           s"streaming upsert $name did not finish within 300s — state would be partial")
       }
-      logBatches(name, q)
       val last = gens().lastOption.getOrElse(throw new IllegalStateException(
         s"streaming upsert $name produced no state generation (empty source?)"))
       spark.read.parquet(s"$stateDir/gen-$last")
-    } finally deleteRecursively(new java.io.File(checkpoint))
+    } finally FileUtil.fullyDelete(new java.io.File(checkpoint))
   }
 }

@@ -377,11 +377,10 @@ class PlanAuditSpec extends SparkSpec {
     // show a partition filter and read only the probed partitions
     import org.apache.spark.sql.functions._
     import graft.operators.Similarity
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_layout").toString
+    val tmp = tempDir("graft_ann_layout").toString
     val emb = Tables.embeddings(spark, Dir)
       .withColumn("embedding", col("embedding").cast("array<double>"))
-    val planes = Similarity.hyperplanes(64, 3)
-    emb.withColumn("bucket", Similarity.lshBucket(col("embedding"), planes))
+    emb.withColumn("bucket", Similarity.portableBucketNative(col("embedding"), 3, 64))
       .write.partitionBy("bucket").mode("overwrite").parquet(tmp)
     val probes = Seq(0L, 1L) // any 2 of the 8 buckets
     val probed = spark.read.parquet(tmp).filter(col("bucket").isin(probes: _*))
@@ -403,7 +402,7 @@ class PlanAuditSpec extends SparkSpec {
     // scan must return exactly what the in-memory search returns
     import org.apache.spark.sql.functions._
     import graft.operators.IvfIndex
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_layout").toString
+    val tmp = tempDir("graft_ivf_layout").toString
     val emb = Tables.embeddings(spark, Dir)
       .withColumn("embedding", col("embedding").cast("array<double>"))
     val model = IvfIndex.fit(emb, "embedding", k = 8)
@@ -434,7 +433,7 @@ class PlanAuditSpec extends SparkSpec {
     // exact re-rank then fetches true vectors for shortlist ids only
     import org.apache.spark.sql.functions._
     import graft.operators.{FixedPointKMeans, IvfPq}
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_layout").toString
+    val tmp = tempDir("graft_ivfpq_layout").toString
     val quant = Tables.embeddings(spark, Dir)
       .select(col("vec_id"),
         FixedPointKMeans.quantize(col("embedding").cast("array<double>")).as("v"))

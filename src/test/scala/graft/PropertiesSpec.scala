@@ -140,7 +140,8 @@ class PropertiesSpec extends SparkSpec {
             TextAnalysis.tokens(col("text")), 3)).as("native_sh"),
           sort_array(array_distinct(
             TextAnalysis.shingleHashes(col("text"), 3))).as("decl_sh"),
-          graft.operators.Dedup.simhashChunks(col("text")).as("native_sk"),
+          graft.expressions.TextHashExprs.simhashChunks(
+            TextAnalysis.tokens(col("text"))).as("native_sk"),
           graft.operators.Dedup.simhashChunksDeclarative(col("text")).as("decl_sk"))
         .collect()
       rows.foreach { r =>

@@ -113,7 +113,7 @@ class CorpusReportsSpec extends SparkSpec {
       (3L, "completely unrelated filler text with nothing repeated at all " +
         "padding padding2 padding3 padding4 padding5 padding6 padding7")
     ).toDF("doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("spans").toString
+    val tmp = tempDir("spans").toString
     docs.withColumn("lang", lit("en")).withColumn("source", lit("s"))
       .withColumn("n_chars", length($"text").cast("long"))
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -238,16 +238,15 @@ class CorpusReportsSpec extends SparkSpec {
     import spark.implicits._
     val docs = graft.Tables.documents(spark, Dir)
     val direct = graft.operators.Dedup.minhashDedupPairs(docs, "doc_id", "text",
-        k = 3, numHashes = 32, bands = 8, threshold = 0.5, maxBucket = 100,
-        portable = true)
+        k = 3, numHashes = 32, bands = 8, threshold = 0.5, maxBucket = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // round-trip the signatures through parquet (the index path) first
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sig_idx").toString
+    val tmp = tempDir("graft_sig_idx").toString
     graft.operators.Dedup.minhashSignatures(docs, "doc_id", "text",
-      k = 3, numHashes = 32, portable = true).write.mode("overwrite").parquet(tmp)
+      k = 3, numHashes = 32).write.mode("overwrite").parquet(tmp)
     val viaIndex = graft.operators.Dedup.minhashPairsFromSignatures(
         spark.read.parquet(tmp), numHashes = 32, bands = 8,
-        threshold = 0.5, maxBucket = 100, portable = true)
+        threshold = 0.5, maxBucket = 100)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaIndex === direct, "the persisted-index path must be a pure refactor")
   }

@@ -61,7 +61,7 @@ class StatQueriesSpec extends SparkSpec {
       t(3, 0, "view"), t(3, 1, "click"),
       t(4, 0, "view"), t(4, 2, "click"))
       .toDF("user_id", "ts", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("km").toString
+    val dir = tempDir("km").toString
     ev.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = graft.SparkEntry.queries("q_survival")(spark, dir).collect()
     val s = out.map(r => r.getLong(0) ->
@@ -145,7 +145,7 @@ class StatQueriesSpec extends SparkSpec {
       t(3, 0, "view"), t(3, 1, "purchase"),
       t(4, 0, "view"))
       .toDF("user_id", "event_id", "ts", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("mk").toString
+    val dir = tempDir("mk").toString
     ev.select($"user_id", $"ts", $"event_id", $"event_type")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = graft.SparkEntry.queries("q_markov_attribution")(spark, dir).collect()
@@ -186,7 +186,7 @@ class StatQueriesSpec extends SparkSpec {
       q <- 1 to 6
       d <- Seq(0.00, 0.02, 0.04, 0.08)
     } yield ("A", q.toDouble, d, 3.0 + 2.0 * q + 5.0 * d)
-    val dir = java.nio.file.Files.createTempDirectory("ols").toString
+    val dir = tempDir("ols").toString
     rows.toDF("l_returnflag", "l_quantity", "l_discount", "l_extendedprice")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val out = graft.SparkEntry.queries("q_multi_ols")(spark, dir).collect()
@@ -207,7 +207,7 @@ class StatQueriesSpec extends SparkSpec {
       t(2, 0, "signup", 1.0), t(2, 1, "error", 0.0), t(2, 2, "signup", 7.5), // reinserted
       t(3, 0, "view", 3.25)) // update-only key
       .toDF("user_id", "event_id", "ts", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("cdc").toString
+    val dir = tempDir("cdc").toString
     ev.select($"user_id", $"ts", $"event_id", $"event_type", $"value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val out = graft.SparkEntry.queries("q_cdc_apply")(spark, dir).collect()
@@ -272,7 +272,7 @@ class StatQueriesSpec extends SparkSpec {
       (1L, ts("1995-06-01"), 10.0, 100.0), (2L, ts("1995-06-01"), 5.0, 35.0),
       (1L, ts("1996-06-01"), 4.0, 40.0), (2L, ts("1996-06-01"), 10.0, 70.0))
       .toDF("l_partkey", "l_shipdate", "l_quantity", "l_extendedprice")
-    val dir = java.nio.file.Files.createTempDirectory("pidx").toString
+    val dir = tempDir("pidx").toString
     li.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val out = graft.SparkEntry.queries("q_price_index")(spark, dir).collect()
     assert(out.length === 1)

@@ -73,7 +73,7 @@ class TextHashSpec extends SparkSpec {
 
   test("SimHashChunks equals the declarative vote fold") {
     val rows = docs.select(
-        Dedup.simhashChunks(col("text")).as("native"),
+        TextHashExprs.simhashChunks(TextAnalysis.tokens(col("text"))).as("native"),
         Dedup.simhashChunksDeclarative(col("text")).as("decl"))
       .collect()
     rows.foreach { r =>
@@ -144,7 +144,7 @@ class TextHashSpec extends SparkSpec {
     // chunk fold pins both the h31 | h131<<32 packing and the MSB-first
     // chunk layout
     val sk = Seq("ab").toDF("text")
-      .select(Dedup.simhashChunks(col("text"), portable = true))
+      .select(Dedup.simhashChunks(col("text")))
       .collect()(0).getSeq[Long](0)
     val h64 = poly("ab", 31L) | (poly("ab", 131L) << 32)
     val wantChunks = (0 until 4).map { c =>

@@ -13,23 +13,12 @@ class DedupSimilaritySpec extends SparkSpec {
   private lazy val emb = Tables.embeddings(spark, Dir)
     .withColumn("embedding", col("embedding").cast("array<double>")).cache()
 
-  test("minhash LSH recovers the high-Jaccard pairs (recall vs exact)") {
-    val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", k = 3, minJaccard = 0.8)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(exact.nonEmpty, "corpus should contain planted near-dups")
-    val mh = Dedup.minhashDedupPairs(docs, "doc_id", "text",
-        k = 3, numHashes = 32, bands = 8, threshold = 0.5)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall = exact.count(mh.contains).toDouble / exact.size
-    assert(recall >= 0.9, s"minhash recall $recall over ${exact.size} exact pairs")
-  }
-
   test("PORTABLE minhash family recovers the high-Jaccard pairs too") {
     val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", k = 3, minJaccard = 0.8)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty)
     val mh = Dedup.minhashDedupPairs(docs, "doc_id", "text",
-        k = 3, numHashes = 32, bands = 8, threshold = 0.5, portable = true)
+        k = 3, numHashes = 32, bands = 8, threshold = 0.5)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = exact.count(mh.contains).toDouble / exact.size
     assert(recall >= 0.9, s"portable minhash recall $recall over ${exact.size} exact pairs")
@@ -51,7 +40,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", k = 3, minJaccard = 0.8)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val wp = Dedup.winnowPairs(docs, "doc_id", "text", k = 3, w = 4,
-        minShared = 2, portable = true)
+        minShared = 2)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = exact.count(wp.contains).toDouble / exact.size
     assert(recall >= 0.9, s"portable winnow recall $recall over ${exact.size} exact pairs")
@@ -60,21 +49,11 @@ class DedupSimilaritySpec extends SparkSpec {
   test("PORTABLE simhash family finds near-dup pairs (4 structural-zero bits)") {
     val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", k = 3, minJaccard = 0.9)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val sh = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 6, portable = true)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(exact.nonEmpty && sh.nonEmpty)
-    val recall = exact.count(sh.contains).toDouble / exact.size
-    assert(recall >= 0.7, s"portable simhash recall $recall over ${exact.size} exact pairs")
-  }
-
-  test("simhash finds near-dup pairs consistent with exact Jaccard") {
-    val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", k = 3, minJaccard = 0.9)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val sh = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 6)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty && sh.nonEmpty)
     val recall = exact.count(sh.contains).toDouble / exact.size
-    assert(recall >= 0.7, s"simhash recall $recall over ${exact.size} exact pairs")
+    assert(recall >= 0.7, s"portable simhash recall $recall over ${exact.size} exact pairs")
   }
 
   test("exact groups account for every doc exactly once") {
@@ -301,15 +280,15 @@ class DedupSimilaritySpec extends SparkSpec {
 
   test("semanticDedup: survivors = corpus minus higher-id near-dup members") {
     // self-consistency on the real corpus: the survivor set must be
-    // exactly the anti-join of the pair generator's id_b side, under the
-    // SAME parameters
-    val params = (0.4, 5, 42L, 64, 1)
+    // exactly the anti-join of the single-table pair generator's id_b
+    // side, under the SAME parameters (one portable table blocks
+    // identically)
     val pairs = Similarity.embeddingDupPairs(emb, "vec_id", "embedding",
-      params._1, params._2, params._3, params._4, params._5)
+      threshold = 0.4, nPlanes = 5, dim = 64, probeRadius = 1, portablePlanes = true)
     val dropped = pairs.select(col("id_b")).distinct()
       .collect().map(_.getLong(0)).toSet
-    val survivors = Similarity.semanticDedup(emb, "vec_id", "embedding",
-        params._1, params._2, params._3, params._4, params._5)
+    val survivors = Similarity.semanticDedupTables(emb, "vec_id", "embedding",
+        threshold = 0.4, nPlanes = 5, tables = 1, dim = 64, probeRadius = 1)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     val allIds = emb.select("vec_id").collect().map(_.getLong(0)).toSet
     assert(survivors === allIds -- dropped)
@@ -328,8 +307,8 @@ class DedupSimilaritySpec extends SparkSpec {
       Seq(math.cos(ang), math.sin(ang)) ++ Seq.fill(62)(0.0)
     val rows = Seq((0L, vec(0)), (1L, vec(theta)), (2L, vec(2 * theta)))
     val df = spark.createDataFrame(rows).toDF("vec_id", "embedding")
-    val survivors = Similarity.semanticDedup(df, "vec_id", "embedding",
-        threshold = 0.9, nPlanes = 2, probeRadius = 2)
+    val survivors = Similarity.semanticDedupTables(df, "vec_id", "embedding",
+        threshold = 0.9, nPlanes = 2, tables = 1, probeRadius = 2)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(survivors === Set(0L),
       s"greedy pruning keeps only the chain head, got $survivors")
@@ -357,7 +336,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val clean = Seq(
       (9003L, cleanBody + " ptail1 ptail2"),
       (9004L, cleanBody + " qtail1 qtail2"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_brecall").toString
+    val dir = tempDir("graft_brecall").toString
     try {
       (carriers ++ planted ++ clean).toDF("doc_id", "text")
         .withColumn("lang", lit("en")).withColumn("source", lit("spec"))

@@ -157,7 +157,7 @@ class DedupSkewSpec extends SparkSpec {
       Dedup.connectedComponents(pairChain)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
+    val dir = tempDir("graft_cc_ckpt").toString
     try {
       val durable = DriverLoop.withMaxRows(0L) {
         Dedup.connectedComponents(pairChain, checkpointDir = Some(dir))
@@ -177,7 +177,7 @@ class DedupSkewSpec extends SparkSpec {
         "superseded checkpoint generations were not reclaimed")
       // the DRIVER fast path materializes into local rows — with a
       // checkpoint dir it must reclaim even the edge checkpoint
-      val dir2 = java.nio.file.Files.createTempDirectory("graft_cc_ckpt_drv")
+      val dir2 = tempDir("graft_cc_ckpt_drv")
       val viaDriver = Dedup.connectedComponents(pairChain,
           checkpointDir = Some(dir2.toString))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap

@@ -115,7 +115,7 @@ class GraphsSpec extends SparkSpec {
 
   test("durable checkpoint path: identical ranks, superseded generations reclaimed") {
     val edges = (0L until 50L).map(i => (i, (i * 13 + 1) % 50L, 1L + i % 3))
-    val dir = java.nio.file.Files.createTempDirectory("graft_pr_ckpt").toString
+    val dir = tempDir("graft_pr_ckpt").toString
     try {
       val local = ranks(edges, iters = 6)
       val durable = Graphs.pagerank(edges.toDF("src", "dst", "w"),

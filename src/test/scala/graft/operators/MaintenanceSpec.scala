@@ -7,7 +7,7 @@ class MaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
   test("compactParquet collapses a many-small-file dir with row parity") {
-    val out = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val out = tempDir("graft_compact").toString
     spark.range(10000).select($"id", md5($"id".cast("string")).as("payload"))
       .repartition(40)
       .write.mode("overwrite").parquet(out)
@@ -22,14 +22,14 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("compactParquet is a no-op when the layout already meets the target") {
-    val out = java.nio.file.Files.createTempDirectory("graft_compact2").toString
+    val out = tempDir("graft_compact2").toString
     spark.range(100).repartition(2).write.mode("overwrite").parquet(out)
     val (b, a) = Maintenance.compactParquet(spark, out, targetFileBytes = 1L)
     assert(b == 2 && a == 2) // target smaller than files: nothing to gain
   }
 
   test("compactPartitioned compacts each leaf, preserving partition values") {
-    val out = java.nio.file.Files.createTempDirectory("graft_compact_part").toString
+    val out = tempDir("graft_compact_part").toString
     spark.range(3000)
       .select($"id", ($"id" % 3).cast("string").as("part"), md5($"id".cast("string")).as("payload"))
       .repartition(8)
@@ -54,7 +54,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("compactPartitioned recovers a leaf whose previous sweep died mid-swap") {
-    val out = java.nio.file.Files.createTempDirectory("graft_compact_crash").toString
+    val out = tempDir("graft_compact_crash").toString
     spark.range(600)
       .select($"id", ($"id" % 2).cast("string").as("part"))
       .repartition(4)
@@ -82,7 +82,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("compactParquet deletes a stale backup left by a crash after the swap") {
-    val out = java.nio.file.Files.createTempDirectory("graft_compact_stale").toString
+    val out = tempDir("graft_compact_stale").toString
     spark.range(200).write.mode("overwrite").parquet(out)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     // simulate a run that committed its tmp->dir rename but died before
@@ -98,7 +98,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("compactPartitioned on a flat directory delegates to compactParquet") {
-    val out = java.nio.file.Files.createTempDirectory("graft_compact_flat").toString
+    val out = tempDir("graft_compact_flat").toString
     spark.range(500).repartition(6).write.mode("overwrite").parquet(out)
     val (visited, rewritten) = Maintenance.compactPartitioned(spark, out, targetFileBytes = 1L << 30)
     assert(visited == 1 && rewritten == 1)
@@ -135,7 +135,7 @@ class MaintenanceSpec extends SparkSpec {
       val (lo, hi) = (11000.0, 13500.0)
       spans.count { case (mn, mx) => mx >= lo && mn <= hi }.toDouble / spans.size
     }
-    val zdir = java.nio.file.Files.createTempDirectory("graft_zorder").toString + "/t"
+    val zdir = tempDir("graft_zorder").toString + "/t"
     val nFiles = Maintenance.writeZOrdered(spark, df, Seq("x", "y"), zdir,
       numFiles = 16, bits = 4)
     assert(nFiles >= 8, s"expected a multi-file layout, got $nFiles")
@@ -149,7 +149,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(zx <= 0.75, s"x not clustered under z-order: $zx of files overlap a 1/8 slice")
     assert(zy <= 0.75, s"y not clustered under z-order: $zy of files overlap a 1/8 slice")
     // baseline: range-partition + sort on x alone — y spans everything
-    val sdir = java.nio.file.Files.createTempDirectory("graft_sorted").toString + "/t"
+    val sdir = tempDir("graft_sorted").toString + "/t"
     df.repartitionByRange(16, $"x").sortWithinPartitions($"x")
       .write.mode("overwrite").parquet(sdir)
     val sy = overlapFrac(fileSpans(sdir, "y"))
@@ -161,7 +161,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("readEvolved unions evolved schemas, padding old files with null") {
-    val out = java.nio.file.Files.createTempDirectory("graft_evolve").toString
+    val out = tempDir("graft_evolve").toString
     Seq((1L, "a")).toDF("id", "v").write.parquet(s"$out/f1")
     Seq((2L, "b", 9.5)).toDF("id", "v", "score").write.parquet(s"$out/f2")
     val df = Maintenance.readEvolved(spark, s"$out/f*")

@@ -71,7 +71,7 @@ class ChartsSpec extends SparkSpec {
   }
 
   test("renderAll produces the four figures as valid PNGs at the declared geometry") {
-    val out = java.nio.file.Files.createTempDirectory("graft_charts").toString
+    val out = tempDir("graft_charts").toString
     val files = Charts.renderAll(clean, out)
     assert(files.length === 4)
     files.foreach { f =>

@@ -15,7 +15,7 @@ class PartitionedLayoutSpec extends SparkSpec {
   private val Dir = "/root/testdata/sf0.001"
 
   test("date-partitioned events: bounded scan prunes to selected partitions") {
-    val out = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val out = tempDir("graft_part").toString
     val ev = Tables.events(spark, Dir)
       .withColumn("event_date", date_format($"ts", "yyyy-MM-dd"))
     ev.write.mode("overwrite").partitionBy("event_date").parquet(out)
@@ -48,7 +48,7 @@ class PartitionedLayoutSpec extends SparkSpec {
   }
 
   test("ORC round-trip preserves schema and rows") {
-    val out = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val out = tempDir("graft_orc").toString
     val src = Tables.nation(spark, Dir)
     Sources.writeOrc(src, out)
     val back = Sources.readOrc(spark, out, src.schema)

@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** A local filesystem under a scheme NO default Hadoop conf knows:
   * resolvable only when the session's `spark.hadoop.fs.graftprobe.impl`
@@ -19,7 +18,7 @@ class GraftProbeFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
 class ResilientSourceSpec extends SparkSpec {
 
   private val Dir = "/root/testdata/sf0.001"
-  private lazy val tmp = Files.createTempDirectory("graft_resilient").toString
+  private lazy val tmp = tempDir("graft_resilient").toString
 
   private def readPages(dir: String, opts: Map[String, String] = Map.empty) = {
     val base = spark.read.format("graft.sources.ResilientSourceProvider")

@@ -10,7 +10,7 @@ import java.nio.file.Files
   * processing — the §2.1/§2.9 and multimodal coverage. */
 class SourcesStreamingSpec extends SparkSpec {
 
-  private lazy val tmp = Files.createTempDirectory("graft_io").toString
+  private lazy val tmp = tempDir("graft_io").toString
   private val Dir = "/root/testdata/sf0.001"
 
   /** The events file with its PHYSICAL ts shape intact (nanos long or
@@ -284,7 +284,7 @@ class SourcesStreamingSpec extends SparkSpec {
     val base = 1700000000000L // ms
     val rows = Seq((1L, base * 1000000L, 10L, "view", 1.0, "{}"),
       (2L, (base + 1500L) * 1000000L, 11L, "click", 2.0, "{}"))
-    val nanosDir = java.nio.file.Files.createTempDirectory("ev_nanos").toString
+    val nanosDir = tempDir("ev_nanos").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$nanosDir/events.parquet")
     val viaLong = Tables.events(spark, nanosDir)
@@ -481,14 +481,11 @@ class SourcesStreamingSpec extends SparkSpec {
     // deterministic: same payload → same features
     val again = Multimodal.extractFeatures(media).collect()
     assert(rows.sortBy(_.media_id).toSeq === again.sortBy(_.media_id).toSeq)
-    // resize truncates payloads batch-wise
-    val resized = Multimodal.resize(media, 16).collect()
-    assert(resized.forall(_.payload.length <= 16))
   }
 
   test("multimodal: binaryFile ingestion reads real files into the decode path") {
     implicit val s = spark
-    val dir = Files.createTempDirectory("graft_media")
+    val dir = tempDir("graft_media")
     def png(w: Int, h: Int): Array[Byte] = {
       val img = new java.awt.image.BufferedImage(
         w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
